@@ -98,23 +98,6 @@ object Par {
         1L + rows / 50000L),
       rows / 1000000L).toInt
 
-  /** Node set of a two-long-column edge frame, as an RDD already
-    * partitioned by the graph loop's partitioner: ONE shuffle — flatMap
-    * both endpoints, reduceByKey straight into `part`. The former
-    * DataFrame `union + distinct` paid its own exchange AND a second
-    * `partitionBy(part)` shuffle to land on the loop's partitioner
-    * (measured ~1.5 s of the HITS setup at sf0.1, r16). Same node set,
-    * same final partitioning — integer keys, order-free set semantics. */
-  def nodeSet(e: org.apache.spark.sql.DataFrame,
-              part: org.apache.spark.HashPartitioner)
-      : org.apache.spark.rdd.RDD[(Long, Unit)] = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    e.as[(Long, Long)].rdd
-      .flatMap { case (s, d) => Iterator((s, ()), (d, ())) }
-      .reduceByKey(part, (a, _) => a)
-  }
-
   /** 1-based global rank of `df` ordered by `orderCol` (must be unique),
     * WITHOUT a single-partition window: range-partition on the order
     * column so partition order == global order, count rows per

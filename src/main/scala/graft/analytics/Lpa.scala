@@ -1,7 +1,9 @@
 package graft.analytics
 
-import graft.Mat.Pinnable
+import graft.analytics.Iterate.{Graph, prepareGraph}
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,15 +22,14 @@ import org.apache.spark.sql.functions._
   * update together, labels start as node ids, a fixed round count.
   * Every step is integer/rank arithmetic — bit-identical in DuckDB.
   *
-  * Scale shape: the [[PageRank]] RDD discipline — one lazy lineage
-  * evaluated once (a DataFrame-loop draft paid Catalyst replanning +
-  * eager checkpoints per round). Adjacency hash-partitioned and
-  * persisted up front; per round, ONE vote shuffle: `aggregateByKey`
-  * combines (node, label) votes map-side into per-node label→count
-  * maps and the election — count desc, label asc, a total order —
-  * runs in the finalizer; then a NARROW leftOuterJoin back to the
-  * co-partitioned node vector (no-in-edge nodes keep their label). No
-  * per-round action, no global anything, nothing quadratic.
+  * Scale shape: the [[PageRank]] discipline on [[Iterate]] — one lazy
+  * lineage evaluated once (a DataFrame-loop draft paid Catalyst
+  * replanning + eager checkpoints per round). Per round, ONE vote
+  * shuffle: `aggregateByKey` combines (node, label) votes map-side into
+  * per-node label→count maps and the election runs in the finalizer;
+  * then a NARROW leftOuterJoin back to the co-partitioned node vector
+  * (no-in-edge nodes keep their label). No per-round action, no global
+  * anything, nothing quadratic.
   *
   * Skew bound: a node's vote map is bounded by its DISTINCT in-neighbor
   * labels — the map-side combine spreads the build, but one reducer
@@ -40,19 +41,16 @@ import org.apache.spark.sql.functions._
   */
 object Lpa {
 
-  /** ONE synchronous vote round over the prepared graph — the
-    * vote/election/carry-forward arithmetic shared STRUCTURALLY by
-    * [[labelPropagation]], [[convergence]] and
-    * [[labelPropagationUntil]], so their bit-identity contracts hold by
-    * construction instead of by hand-mirrored code (r13 review). ONE
-    * shuffle: votes combine map-side into per-node label→count maps,
+  private type Vec = RDD[(Long, Long)]
+
+  /** ONE synchronous vote round over the prepared graph — shared by every
+    * label face, so their bit-identity contracts hold by construction.
+    * ONE shuffle: votes combine map-side into per-node label→count maps,
     * the election (count desc, label asc — a total order) runs in the
     * finalizer; the carry-forward left join is narrow (both sides share
     * `part`). */
-  private def voteRound(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-                        part: org.apache.spark.HashPartitioner)(
-                        labels: org.apache.spark.rdd.RDD[(Long, Long)])
-      : org.apache.spark.rdd.RDD[(Long, Long)] = {
+  private def voteRound(adj: RDD[(Long, Array[Long])], part: HashPartitioner)(
+      labels: Vec): Vec = {
     val elected = adj.join(labels)
       .flatMap { case (_, (dsts, lab)) => dsts.iterator.map(d => (d, lab)) }
       .aggregateByKey(scala.collection.mutable.LongMap.empty[Long], part)(
@@ -77,154 +75,70 @@ object Lpa {
       .mapValues { case (old, o) => o.getOrElse(old) }
   }
 
-  /** Prepared LPA graph state: edges persisted, adjacency
-    * hash-partitioned with per-node dedup, node set co-partitioned.
-    * Extracted (r17) so [[labelPropagation]], [[untilCore]] and
-    * [[convergence]] share ONE prep instead of three hand-mirrored
-    * copies — the same drift-risk class the r16 advisor flagged for the
-    * RefinedWeb stage builders. (A cogroup fusing adjacency + node set
-    * into one shuffle was A/B-probed and is slower — see
-    * [[PageRank]]'s prepareGraph note — so the shape is unchanged.) */
-  private final case class LpaGraph(
-      e: DataFrame, part: org.apache.spark.HashPartitioner,
-      adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      nodes: org.apache.spark.rdd.RDD[(Long, Unit)]) {
-    def initLabels: org.apache.spark.rdd.RDD[(Long, Long)] =
-      nodes.mapPartitions(
-        _.map { case (v, _) => (v, v) }, preservesPartitioning = true)
-    def unpersistAll(): Unit = {
-      e.unpersist(false); adj.unpersist(false); nodes.unpersist(false); ()
+  /** The label loop over one prepared graph: labels start as node ids. */
+  private def labelChain[A](edges: DataFrame, srcCol: String, dstCol: String)(
+      run: (Graph, Iterate[Vec]) => A): A =
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      run(g, Iterate[Vec](_.vec(g.nodes.mapPartitions(
+          _.map { case (v, _) => (v, v) }, preservesPartitioning = true)))((l, k) =>
+        k.vec(voteRound(g.adj, g.part)(l))))
     }
-  }
 
-  private def prepare(edges: DataFrame, srcCol: String,
-                      dstCol: String): LpaGraph = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .persist(lvl)
-    val nParts = graft.Par.graphParts(e, e.count())
-    val part = new org.apache.spark.HashPartitioner(nParts)
-    val adj = e.as[(Long, Long)].rdd
-      .groupByKey(part).mapValues(_.toArray.distinct.sorted).persist(lvl)
-    val nodes = graft.Par.nodeSet(e, part).persist(lvl)
-    LpaGraph(e, part, adj, nodes)
-  }
-
+  /** (node, community) after `rounds` synchronous rounds, ordered by
+    * node; directed (src, dst) edges vote along their direction,
+    * multi-edges count once, rows with a null endpoint are dropped, and
+    * an empty edge set gives an empty frame. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int = 5): DataFrame = {
-    require(rounds >= 1, "need rounds >= 1")
-    val spark = edges.sparkSession
-    val g = prepare(edges, srcCol, dstCol)
-    val (adj, part) = (g.adj, g.part)
-    var labels = g.initLabels
-    for (_ <- 1 to rounds)
-      labels = voteRound(adj, part)(labels)
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("community", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        labels.map { case (v, c) => org.apache.spark.sql.Row(v, c) }, schema)
-      .orderBy(col("node"))
-      .pinned
-    g.unpersistAll()
-    out
-  }
+                       rounds: Int = 5): DataFrame =
+    labelChain(edges, srcCol, dstCol)((g, it) =>
+      it.fixed(rounds)(g.result(_, "node", "community")))
 
-  /** [EXT] Convergence-driven early stop for LPA (r13): propagate until
-    * the round's churn — #{v : label changed}, the column the F135
-    * curve measures — drops to `maxChurn` or below, or `maxRounds` is
-    * hit. LPA's natural stopping rule is churn = 0 (the default);
-    * a positive `maxChurn` stops at "practically settled" on graphs
-    * whose label frontier rings forever. Returns ((node, community),
-    * stop round), bit-identical to `labelPropagation(rounds = stop)`
-    * (spec-pinned) — same vote/election arithmetic, the stop only adds
-    * a per-round churn action over the persisted co-partitioned
-    * vectors (two label vectors live at any moment). */
+  /** [EXT] [[labelPropagation]] with a convergence-driven early stop:
+    * propagate until the round's churn — #{v : label changed} — drops to
+    * `maxChurn` or below, or `maxRounds` is hit. LPA's natural stopping
+    * rule is churn = 0 (the default); a positive `maxChurn` stops at
+    * "practically settled" on graphs whose label frontier rings forever.
+    * Returns ((node, community), stop round), BIT-identical to
+    * `labelPropagation(rounds = stop)`; the stop adds one churn action
+    * per round. */
   def labelPropagationUntil(edges: DataFrame, srcCol: String, dstCol: String,
                             maxChurn: Long = 0L, maxRounds: Int = 50)
       : (DataFrame, Int) = {
     require(maxChurn >= 0L, "maxChurn is a non-negative node count")
-    untilCore(edges, srcCol, dstCol, _ => maxChurn, maxRounds)
+    labelUntil(edges, srcCol, dstCol, _ => maxChurn, maxRounds)
   }
 
-  /** Shared loop for the absolute and ppm churn stops: the threshold is
-    * derived from |V| AFTER the node RDD is built and persisted, so the
-    * ppm face pays one cheap count on the persisted vector instead of
-    * re-deriving the whole edge set (r15 review — the copurchase edge
-    * construction is the dominant cost of the part_communities family,
-    * and a naive wrapper executed it twice). */
-  private def untilCore(edges: DataFrame, srcCol: String, dstCol: String,
-                        thresholdOf: (=> Long) => Long, maxRounds: Int)
-      : (DataFrame, Int) = {
-    require(maxRounds >= 1, "need maxRounds >= 1")
-    val spark = edges.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val g = prepare(edges, srcCol, dstCol)
-    val (adj, part) = (g.adj, g.part)
-    var labels = g.initLabels.persist(lvl)
-    // |V| from the persisted node vector — by-name, so the absolute
-    // face (a constant function) never forces the count; the ppm face
-    // pays one cheap co-partitioned count
-    val maxChurn = thresholdOf(g.nodes.count())
-    var stop = maxRounds
-    var k = 0
-    var settled = false
-    while (k < maxRounds && !settled) {
-      k += 1
-      val prev = labels
-      labels = voteRound(adj, part)(prev).persist(lvl)
-      // churn action materializes the new vector's blocks too — one
-      // evaluation serves the stop decision and the next round's votes
-      val churn = labels.join(prev)
-        .map { case (_, (a, b)) => if (a != b) 1L else 0L }.fold(0L)(_ + _)
-      prev.unpersist(false)
-      if (churn <= maxChurn) { settled = true; stop = k }
-    }
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("community", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        labels.map { case (v, c) => org.apache.spark.sql.Row(v, c) }, schema)
-      .orderBy(col("node"))
-      .pinned
-    g.unpersistAll()
-    labels.unpersist(false)
-    (out, stop)
-  }
-
-  /** [EXT] SCALE-FREE churn stop (r15): threshold = `maxChurnPpm`
-    * parts-per-million of |V|, so the same setting means the same
-    * RELATIVE settledness at every corpus size. The r15 scale audit
-    * measured why this matters: the absolute-count face
-    * ([[labelPropagationUntil]]) went 12.0× at m10 because a fixed
-    * 1200-flip threshold is relatively 10× tighter on a 10× graph and
-    * the stop runs deeper into the rail — absolute churn counts do not
-    * transfer across scales, residual FRACTIONS do (the trust/spam
-    * faces' fixed-point-of-total-mass tolerances are already
-    * scale-free). |V| comes from ONE count on the loop's own persisted
-    * node vector (not a second edge derivation); the stop
-    * rule `churn · 10⁶ ≤ ppm · |V|` is integer-exact (equivalent to
-    * `churn ≤ ⌊ppm·|V|∕10⁶⌋` for integer churn — the form the DuckDB
-    * oracle replays). `maxChurnPpm` is bounded to [0, 10⁶]: above 10⁶
-    * the fraction is meaningless (every round would stop), and a huge
-    * Long would overflow `n * maxChurnPpm` to negative — silently
-    * disabling the stop here while DuckDB's BIGINT multiply errors —
-    * so both engines stay in the proven-equivalent integer range
-    * (r15 ADVICE). */
+  /** [EXT] [[labelPropagationUntil]] with a SCALE-FREE threshold:
+    * `maxChurnPpm` parts-per-million of |V|, so one setting means the
+    * same RELATIVE settledness at every corpus size (a fixed 1200-flip
+    * threshold is 10× tighter on a 10× graph: the absolute face went
+    * 12.0× slower at m10 because its stop ran deeper into the rail). The
+    * rule `churn · 10⁶ ≤ ppm · |V|` is integer-exact, equivalent to
+    * `churn ≤ ⌊ppm·|V|∕10⁶⌋` — the form the DuckDB oracle replays.
+    * `maxChurnPpm` must lie in [0, 10⁶]: above that every round would
+    * stop, and a huge value would overflow `|V| · ppm`. */
   def labelPropagationUntilPpm(edges: DataFrame, srcCol: String,
                                dstCol: String, maxChurnPpm: Long = 0L,
                                maxRounds: Int = 50): (DataFrame, Int) = {
     require(maxChurnPpm >= 0L && maxChurnPpm <= 1000000L,
       "maxChurnPpm is a ppm of |V| in [0, 1000000]")
-    untilCore(edges, srcCol, dstCol, n => n * maxChurnPpm / 1000000L,
-      maxRounds)
+    labelUntil(edges, srcCol, dstCol, _.n * maxChurnPpm / 1000000L, maxRounds)
   }
+
+  /** The early-stop loop of both churn faces. The threshold is taken
+    * from the prepared graph, so the ppm face counts |V| on the
+    * persisted node set instead of deriving the edges twice. */
+  private def labelUntil(edges: DataFrame, srcCol: String, dstCol: String,
+                         thresholdOf: Graph => Long, maxRounds: Int)
+      : (DataFrame, Int) =
+    labelChain(edges, srcCol, dstCol) { (g, it) =>
+      val maxChurn = thresholdOf(g)
+      it.until(maxRounds)((next, prev) => churn(next, prev) <= maxChurn)(
+        (l, k) => (g.result(l, "node", "community"), k))
+    }
+
+  private def churn(a: Vec, b: Vec): Long =
+    a.join(b).map { case (_, (x, y)) => if (x != y) 1L else 0L }.fold(0L)(_ + _)
 
   /** `part_communities`: LPA over the co-purchase part graph
     * ([[PageRank.copurchaseEdges]] — symmetric, so communities are the
@@ -233,74 +147,35 @@ object Lpa {
     labelPropagation(PageRank.copurchaseEdges(lineitem), "src", "dst", rounds)
       .select(col("node").as("part_id"), col("community"))
 
-  /** F135: LPA's convergence curve (`part_communities_convergence`) —
-    * the [[PageRank.convergence]] contract for the label family: per
-    * round, how many nodes CHANGED label and how many distinct
-    * communities remain. LPA's natural stopping rule is "no label
-    * changed"; running it at a fixed round count (the cross-engine
-    * determinism requirement) is licensed only if the churn curve shows
-    * the fixture converged — this makes that a hash-checked number.
-    * Same loop, plus one narrow co-partitioned join per round for the
-    * churn flags and a (round, label) distinct for the community count;
-    * NO per-round action — the whole curve is one job sharing the vote
-    * shuffles. Output is `rounds` rows, config-scale. */
+  /** F135: the per-round convergence curve of [[labelPropagation]]
+    * (`part_communities_convergence`): (round, n_changed =
+    * #{v : label changed}, n_communities = distinct labels), `rounds`
+    * rows ordered by round. Running LPA at a fixed round count (the
+    * cross-engine determinism requirement) is licensed only if the churn
+    * curve shows the graph converged — this makes that a hash-checked
+    * number. The whole curve is one job sharing the vote shuffles. */
   def convergence(edges: DataFrame, srcCol: String, dstCol: String,
-                  rounds: Int = 5): DataFrame = {
-    require(rounds >= 1, "need rounds >= 1")
-    val spark = edges.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val g = prepare(edges, srcCol, dstCol)
-    val (adj, part) = (g.adj, g.part)
-    var labels = g.initLabels
-    // The F130 raw-persist discipline (r13): each round's label vector
-    // feeds THREE consumers — the next round's vote shuffle, the churn
-    // join, and the community counter. The vote SHUFFLES are shared
-    // across branches by map-output reuse regardless, but every narrow
-    // tail (the co-partitioned leftOuterJoin + carry-forward) re-ran per
-    // consumer, and at local-scheduler granularity those re-walks made
-    // this the repo's heaviest probe (20.4 s fresh-JVM vs 8.0 s for the
-    // label query itself). Persisting each round's vector turns all
-    // three reads into block fetches — one evaluation per round, blocks
-    // dropped before return.
-    var pinnedLabels = List.empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    var churn = List.empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    var labs = List.empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    for (k <- 1 to rounds) {
-      val prev = labels
-      labels = voteRound(adj, part)(prev).persist(lvl)
-      pinnedLabels ::= labels
-      val next = labels
-      churn ::= next.join(prev).map { case (_, (a, b)) =>
-        (k.toLong, if (a != b) 1L else 0L)
+                  rounds: Int = 5): DataFrame =
+    labelChain(edges, srcCol, dstCol) { (g, it) =>
+      it.curve(rounds) { (k, next, prev) =>
+        (next.join(prev).map { case (_, (a, b)) => (k, if (a != b) 1L else 0L) },
+          next.map { case (_, lab) => (k, lab) })
+      } { ds =>
+        val (changed, labs) = ds.unzip
+        g.result(g.sc.union(changed).reduceByKey(_ + _)
+            .join(g.sc.union(labs).distinct().map { case (k, _) => (k, 1L) }
+              .reduceByKey(_ + _))
+            .map { case (k, (ch, nc)) => (k, ch, nc) },
+          "round", "n_changed", "n_communities")
       }
-      labs ::= next.map { case (_, lab) => (k.toLong, lab) }
     }
-    val sc = spark.sparkContext
-    val changed = sc.union(churn.reverse).reduceByKey(_ + _)
-    val comms = sc.union(labs.reverse).distinct()
-      .map { case (k, _) => (k, 1L) }.reduceByKey(_ + _)
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("round", LongType, nullable = false),
-      StructField("n_changed", LongType, nullable = false),
-      StructField("n_communities", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        changed.join(comms).map { case (k, (ch, nc)) =>
-          org.apache.spark.sql.Row(k, ch, nc)
-        }, schema)
-      .orderBy(col("round"))
-      .pinned
-    g.unpersistAll()
-    pinnedLabels.foreach(_.unpersist(false))
-    out
-  }
 
   /** [[convergence]] on the standing co-purchase graph fixture. */
   def partCommunitiesConvergence(lineitem: DataFrame,
                                  rounds: Int = 5): DataFrame =
     convergence(PageRank.copurchaseEdges(lineitem), "src", "dst", rounds)
 
-  /** `part_communities_earlystop` query (r13): [[labelPropagationUntil]]
+  /** `part_communities_earlystop` query: [[labelPropagationUntil]]
     * on the standing fixture — the F135 churn curve put to work. The
     * measured curve (2000 → 1692 → 1115 changed nodes) crosses the
     * default 1200-node churn threshold at round 3 of the 5-round
@@ -316,7 +191,7 @@ object Lpa {
       lit(stop.toLong).as("stop_round"))
   }
 
-  /** The scale-free twin (`part_communities_earlystop_ppm`, r15): stop
+  /** The scale-free twin (`part_communities_earlystop_ppm`): stop
     * at ≤ 40% of |V| still churning — on the sf0.01 fixture that is
     * threshold 800 against curve (2000, 1692, 1115, 714, 132), stop
     * round 4 of 5, deliberately DIFFERENT from the absolute twin's
@@ -335,7 +210,7 @@ object Lpa {
   // prelude (graph + l0), the per-round (counts -> election ->
   // carry-forward) triple, the churn curve, and the stop-select are
   // emitted from ONE template each so an election or MATERIALIZED-hint
-  // fix can never drift between mirrors (r15 review).
+  // fix can never drift between mirrors.
 
   /** Prelude CTEs: co-purchase edge derivation, node set, initial
     * labels. `extraCtes` (e.g. a node-count CTE) splices between

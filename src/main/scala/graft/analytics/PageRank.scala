@@ -1,12 +1,12 @@
 package graft.analytics
 
 import graft.Mat.Pinnable
+import graft.analytics.Iterate.{Graph, Keep, prepareGraph}
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** [EXT] PageRank in integer fixed-point arithmetic (`part_pagerank`
   * query) — graph centrality for catalog/link analysis, built so the
@@ -31,14 +31,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Execution shape: the GraphX-style genuine-iterative RDD exception
   * (see [[graft.dedup.Dedup.clusterKeepers]] for the rationale — a
-  * DataFrame loop would pay Catalyst replanning per round). Adjacency
-  * and node RDDs are hash-partitioned ONCE and persisted; each round's
-  * adjacency⋈ranks join is then narrow (zero shuffle) and the only
-  * per-round movement is the reduceByKey of contributions — one
-  * exchange per iteration, the irreducible PageRank cost. Dangling
-  * nodes cannot occur on a symmetrized graph (every node has out-edges);
-  * for general edge lists the mass of dangling nodes simply leaks,
-  * matching the oracle's replay.
+  * DataFrame loop would pay Catalyst replanning per round). Every face
+  * runs on [[Iterate]]: the graph is prepared once (adjacency and node
+  * set hash-partitioned and persisted), so each round's adjacency⋈ranks
+  * join is narrow and the only per-round movement is the reduceByKey of
+  * contributions — one exchange per iteration, the irreducible PageRank
+  * cost. Dangling nodes cannot occur on a symmetrized graph (every node
+  * has out-edges); for general edge lists the mass of dangling nodes
+  * simply leaks, matching the oracle's replay.
   *
   * Scale: |E| edges per round through one exchange; partition count
   * follows the graph size, not the corpus-scan shuffle width.
@@ -47,46 +47,44 @@ object PageRank {
 
   val Scale: Long = 1000000000000L
 
+  private type Vec = RDD[(Long, Long)]
+  private type Pair = RDD[(Long, (Long, Long))]
+  private type Tele = RDD[(Long, (Long, Long))]
+
   /** Ranks over the node set of `edges` (directed (src, dst) pairs;
     * duplicates are deduplicated per node while building the adjacency,
-    * so callers may emit multi-edges freely): (node, rank_fp) with
-    * rank_fp in `Scale` fixed-point units, ordered by node. */
+    * so callers may emit multi-edges freely; rows with a null endpoint
+    * are dropped): (node, rank_fp) with rank_fp in `Scale` fixed-point
+    * units, ordered by node. Throws IllegalArgumentException on a graph
+    * with no nodes. */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iterations: Int = 10, dampingPct: Int = 85): DataFrame =
-    iterate(edges, srcCol, dstCol, None, iterations, dampingPct)
+    rankChain(edges, srcCol, dstCol, None, dampingPct) { (g, it) =>
+      it.fixed(iterations)(g.result(_, "node", "rank_fp"))
+    }
 
-  /** [EXT] Convergence-driven early stop (r13, the F130 curves put to
-    * work): iterate until the round's L1 residual Σ|r_k − r_{k−1}| drops
-    * below `tolFp` (in `Scale` fixed-point units) or `maxIterations` is
-    * hit, whichever first. Returns (ranks, stop round); the vector is
-    * BIT-identical to `ranks(iterations = stop)` — the loop arithmetic
-    * is the same code path, tolerance mode only adds the per-round
-    * residual action (PageRankSpec pins the identity, and pins the stop
-    * round against the measured F130 curve).
-    *
-    * Cost of stopping: unlike [[ranks]]' one-lineage-one-evaluation
-    * shape, a data-dependent stop NEEDS a per-round action, so each
-    * round's vector is persisted and the residual is one narrow
-    * co-partitioned join + sum over node-scale data — the same
-    * discipline [[hits]] already pays for its normalization totals.
-    * Worth it exactly when rounds are expensive and the curve is steep:
-    * the measured fixture curve drops 4 decades in 6 rounds, so a
-    * tolerance stop saves 30-40% of the |E|-shuffle rounds at any scale
-    * where the graph dwarfs the node-vector bookkeeping. */
+  /** [EXT] [[ranks]] with a convergence-driven early stop: iterate until
+    * the round's L1 residual Σ|r_k − r_{k−1}| drops below `tolFp` (in
+    * `Scale` fixed-point units) or `maxIterations` is hit, whichever
+    * first. Returns (ranks, stop round); the vector is BIT-identical to
+    * `ranks(iterations = stop)` — same round arithmetic, plus one
+    * residual action per round over the persisted node vectors. Worth
+    * it when rounds are expensive and the curve is steep: the measured
+    * fixture curve drops 4 decades in 6 rounds, so a tolerance stop
+    * saves 30-40% of the |E|-shuffle rounds. */
   def ranksUntil(edges: DataFrame, srcCol: String, dstCol: String,
                  tolFp: Long, maxIterations: Int = 50,
                  dampingPct: Int = 85): (DataFrame, Int) =
-    iterateUntil(edges, srcCol, dstCol, None, tolFp, maxIterations, dampingPct)
+    rankChain(edges, srcCol, dstCol, None, dampingPct)(rankUntil(tolFp, maxIterations))
 
-  /** [[ranksUntil]] for the TrustRank teleport (seeded) variant — same
-    * core, same bit-identity contract vs [[seededRanks]]. */
+  /** [[ranksUntil]] for the TrustRank teleport: BIT-identical to
+    * `seededRanks(iterations = stop)`. */
   def seededRanksUntil(edges: DataFrame, srcCol: String, dstCol: String,
                        seeds: DataFrame, seedCol: String,
                        tolFp: Long, maxIterations: Int = 50,
                        dampingPct: Int = 85): (DataFrame, Int) =
-    iterateUntil(edges, srcCol, dstCol,
-      Some(seeds.select(col(seedCol).cast("long"))), tolFp, maxIterations,
-      dampingPct)
+    rankChain(edges, srcCol, dstCol, Some(seeds.select(col(seedCol).cast("long"))),
+      dampingPct)(rankUntil(tolFp, maxIterations))
 
   /** [EXT] TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004): PageRank
     * with teleport restricted to a trusted SEED set — trust flows out of
@@ -95,25 +93,122 @@ object PageRank {
     * `Scale ∕ |S∩V|` and `Scale·(100−d) ∕ 100 ∕ |S∩V|` on seeds, 0
     * elsewhere, so total trust mass matches [[ranks]]'s total rank mass
     * and the two are directly comparable (the spam-mass premise). Seeds
-    * outside the node set are ignored; at least one must be in it. */
+    * outside the node set are ignored; at least one must be in it
+    * (IllegalArgumentException otherwise). Output as [[ranks]]. */
   def seededRanks(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
                   iterations: Int = 10, dampingPct: Int = 85): DataFrame =
-    iterate(edges, srcCol, dstCol,
-      Some(seeds.select(col(seedCol).cast("long"))), iterations, dampingPct)
+    rankChain(edges, srcCol, dstCol, Some(seeds.select(col(seedCol).cast("long"))),
+        dampingPct) { (g, it) =>
+      it.fixed(iterations)(g.result(_, "node", "rank_fp"))
+    }
 
-  /** ONE rank round over the prepared graph — the arithmetic shared
-    * STRUCTURALLY by the fixed loop ([[iterate]]), the residual curve
-    * ([[convergence]]) and the tolerance loop ([[iterateUntil]]), so
-    * their bit-identity contracts hold by construction instead of by
-    * hand-mirrored code (r13 review). Zero-rank sources contribute
-    * nothing; no-in-edge nodes fall back to teleport alone (the left
-    * join is narrow — both sides share `part`). */
-  private def rankRound(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-                        tele: org.apache.spark.rdd.RDD[(Long, (Long, Long))],
-                        part: HashPartitioner, dampingPct: Int)(
-                        ranks: org.apache.spark.rdd.RDD[(Long, Long)])
-      : org.apache.spark.rdd.RDD[(Long, Long)] = {
+  /** F130: the per-round convergence curve of [[ranks]]
+    * (`part_pagerank_convergence` query), so "10 rounds suffice" is a
+    * measured decay curve, not an argument: round k's row is
+    * (round, l1_delta_fp = Σ|r_k − r_{k−1}|, linf_delta_fp =
+    * max|r_k − r_{k−1}|, n_changed = #{v : r_k(v) ≠ r_{k−1}(v)}), in
+    * `Scale` fixed-point units — integer arithmetic end to end, so the
+    * curve hash-matches the oracle's unrolled replay. `iterations` rows,
+    * ordered by round; the whole curve is one job sharing the rank
+    * chain's shuffles. */
+  def convergence(edges: DataFrame, srcCol: String, dstCol: String,
+                  iterations: Int = 10, dampingPct: Int = 85): DataFrame =
+    rankChain(edges, srcCol, dstCol, None, dampingPct) { (g, it) =>
+      it.curve(iterations) { (k, next, prev) =>
+        next.join(prev).map { case (_, (a, b)) =>
+          val d = math.abs(a - b)
+          (k, (d, d, if (d != 0L) 1L else 0L))
+        }
+      } { ds =>
+        g.result(g.sc.union(ds)
+            .reduceByKey((a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3))
+            .map { case (k, (s, m, c)) => (k, s, m, c) },
+          "round", "l1_delta_fp", "linf_delta_fp", "n_changed")
+      }
+    }
+
+  /** [EXT] Spam mass (Gyöngyi et al. 2006, `trust_propagation` query):
+    * how much of a node's PageRank is NOT accounted for by trust flowing
+    * from the seed set. Both rank vectors carry total mass ≈ `Scale`
+    * (matched teleport totals), so the comparison is direct:
+    * spam_mass_ppm = max(0, pr − tr)·10⁶ ∕ pr in integer parts-per-
+    * million — near 10⁶ means the node's rank comes almost entirely from
+    * outside the trusted neighborhood (the spam signal); trusted hubs
+    * sit near 0. Long arithmetic end to end (pr ≤ Scale = 10¹², ×10⁶
+    * stays far under Long.Max), bit-identical in the oracle. Output
+    * (node, pr_fp, tr_fp, spam_mass_ppm) ordered by node; pr_fp equals
+    * [[ranks]] and tr_fp [[seededRanks]] at the same round count — the
+    * two chains run fused, one contribution shuffle per round.
+    *
+    * This fixed-round face is the ORACLE twin (an unrolled SQL chain
+    * needs a static round count); the production default is
+    * [[spamMassUntil]]. */
+  def spamMass(edges: DataFrame, srcCol: String, dstCol: String,
+               seeds: DataFrame, seedCol: String,
+               iterations: Int = 10, dampingPct: Int = 85): DataFrame =
+    pairChain(edges, srcCol, dstCol, seeds, seedCol, dampingPct) { (g, _, _, it) =>
+      it.fixed(iterations)(both => g.frame(flat(both), "node", "pr_fp", "tr_fp").pinned)
+    }.withColumn("spam_mass_ppm", spamPpm).orderBy(col("node"))
+
+  /** PRODUCTION face of the spam-mass triple: both rank vectors
+    * tolerance-stopped, each on its OWN residual curve (open PageRank
+    * spreads mass everywhere, seeded trust concentrates, so the two stop
+    * rounds are independent). tolFp = 10⁶ fp units = one millionth of
+    * either vector's total mass; `maxIterations` is a safety rail.
+    * Output (node, pr_fp, tr_fp, spam_mass_ppm, pr_stop, tr_stop)
+    * ordered by node; (pr_fp, pr_stop) equals [[ranksUntil]] and
+    * (tr_fp, tr_stop) [[seededRanksUntil]] run separately. Fixed-round
+    * twin: [[spamMass]]. */
+  def spamMassUntil(edges: DataFrame, srcCol: String, dstCol: String,
+                    seeds: DataFrame, seedCol: String,
+                    tolFp: Long = 1000000L, maxIterations: Int = 50,
+                    dampingPct: Int = 85): DataFrame = {
+    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
+    val (both, kPr, kTr) =
+      pairChain(edges, srcCol, dstCol, seeds, seedCol, dampingPct) {
+          (g, telePr, teleTr, it) =>
+        def out(v: Pair, kPr: Int, kTr: Int) =
+          (g.frame(flat(v), "node", "pr_fp", "tr_fp").pinned, kPr, kTr)
+        // Joint rounds while BOTH chains run — one residual action serves
+        // both stop rules ...
+        var done = (false, false)
+        it.until(maxIterations) { (next, prev) =>
+          val (l1p, l1t) = next.join(prev).map { case (_, ((ap, at), (bp, bt))) =>
+            (math.abs(ap - bp), math.abs(at - bt))
+          }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+          done = (l1p < tolFp, l1t < tolFp)
+          done._1 || done._2
+        } { (v, k) =>
+          if (done._1 == done._2 || k == maxIterations) out(v, k, k)
+          else {
+            // ... then the straggler goes on alone on the single-chain
+            // round with the other vector frozen, which is exactly what
+            // "its own loop ended" means.
+            val prFrozen = done._1
+            rankIterate(g, if (prFrozen) teleTr else telePr, dampingPct,
+                v.mapValues(p => if (prFrozen) p._2 else p._1))
+              .until(maxIterations - k)(l1(_, _) < tolFp) { (s, ks) =>
+                val joined = v.join(s).mapValues { case ((p, t), x) =>
+                  if (prFrozen) (p, x) else (x, t)
+                }
+                if (prFrozen) out(joined, k, k + ks) else out(joined, k + ks, k)
+              }
+          }
+        }
+      }
+    both.withColumn("spam_mass_ppm", spamPpm)
+      .select(col("node"), col("pr_fp"), col("tr_fp"), col("spam_mass_ppm"),
+        lit(kPr.toLong).as("pr_stop"), lit(kTr.toLong).as("tr_stop"))
+      .orderBy(col("node"))
+  }
+
+  /** ONE rank round over the prepared graph — shared by every rank face,
+    * so their bit-identity contracts hold by construction. Zero-rank
+    * sources contribute nothing; no-in-edge nodes fall back to teleport
+    * alone (the left join is narrow — both sides share `part`). */
+  private def rankRound(adj: RDD[(Long, Array[Long])], tele: Tele,
+                        part: HashPartitioner, dampingPct: Int)(ranks: Vec): Vec = {
     val contribs = adj.join(ranks)
       .flatMap { case (_, (dsts, r)) =>
         if (r == 0L) Iterator.empty
@@ -128,19 +223,13 @@ object PageRank {
   }
 
   /** ONE rank round over TWO vectors at once — the [[rankRound]]
-    * arithmetic applied componentwise to a (pr, tr) pair riding one
-    * RDD. The spam-mass faces iterate two chains over the SAME
-    * adjacency; fusing them halves the per-round jobs and shuffles
-    * (guide §1.2 — one pass computing both; §2.4 — one exchange where
-    * two ran). Per-component contributions, sums and teleports are the
-    * exact integer expressions of the single-chain round, so each
-    * component is bit-identical to running [[rankRound]] alone (a zero
-    * rank contributes the same 0 it used to skip). */
-  private def rankRound2(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-                         tele2: org.apache.spark.rdd.RDD[(Long, ((Long, Long), (Long, Long)))],
-                         part: HashPartitioner, dampingPct: Int)(
-                         ranks: org.apache.spark.rdd.RDD[(Long, (Long, Long))])
-      : org.apache.spark.rdd.RDD[(Long, (Long, Long))] = {
+    * arithmetic applied componentwise to a (pr, tr) pair riding one RDD,
+    * so the spam-mass chains share one contribution shuffle per round
+    * and each component stays bit-identical to [[rankRound]] alone (a
+    * zero rank contributes the same 0 it used to skip). */
+  private def rankRound2(adj: RDD[(Long, Array[Long])],
+                         tele2: RDD[(Long, ((Long, Long), (Long, Long)))],
+                         part: HashPartitioner, dampingPct: Int)(ranks: Pair): Pair = {
     val contribs = adj.join(ranks)
       .flatMap { case (_, (dsts, (rp, rt))) =>
         if (rp == 0L && rt == 0L) Iterator.empty
@@ -158,74 +247,17 @@ object PageRank {
       }
   }
 
-  /** The prepared iterative-graph state shared by every rank loop over
-    * one edge frame: edges persisted, adjacency hash-partitioned with
-    * per-node dedup, node set co-partitioned, |V| counted. Extracted
-    * (r16) so the spam-mass faces prepare the graph ONCE for their two
-    * rank chains — the former shape rebuilt the edge decode, adjacency
-    * groupByKey and node-set shuffle per chain (guide §2.4: remove
-    * shuffles outright). Callers own [[PreparedGraph.unpersistAll]] once
-    * their results materialize. */
-  private final case class PreparedGraph(
-      e: DataFrame, part: HashPartitioner,
-      adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      nodes: org.apache.spark.rdd.RDD[(Long, Unit)], n: Long) {
-    def unpersistAll(): Unit = {
-      e.unpersist(false); adj.unpersist(false); nodes.unpersist(false); ()
-    }
-  }
-
-  private def prepareGraph(edges: DataFrame, srcCol: String,
-                           dstCol: String): PreparedGraph = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // Materialize the (possibly expensive) edge derivation once as a
-    // cached DataFrame — the columnar InMemoryRelation costs a build pass
-    // but stays compressed off the GC's back (an RDD-of-tuples persist
-    // was measured 2× slower end-to-end from allocation pressure alone).
-    // persist (not localCheckpoint) so the blocks can be dropped
-    // explicitly once the result materializes — leaked blocks measurably
-    // starve whatever runs next in the session.
-    //
-    // r17 probe note: a cogroup fusing adjacency + node set into one
-    // shuffle stage was A/B-probed and is SLOWER here (0.48 s → 1.4 s
-    // warm on the 2.4M-edge copurchase graph): CoGroupedRDD buffers both
-    // sides and the (dst, ()) registrations lose nodeSet's map-side
-    // combine. The two-shuffle shape below stays.
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .persist(lvl)
-    val nParts = graft.Par.graphParts(e, e.count())
-    val part = new HashPartitioner(nParts)
-    // Adjacency dedups multi-edges per node (a sorted primitive array —
-    // cheaper than a corpus-wide DISTINCT exchange, and the sort makes
-    // the flatMap's emission order deterministic, though integer sums
-    // wouldn't care).
-    val adj = e.as[(Long, Long)].rdd
-      .groupByKey(part)
-      .mapValues(ds => ds.toArray.distinct.sorted)
-      .persist(lvl)
-    val nodes = graft.Par.nodeSet(e, part).persist(lvl)
-    val n = nodes.count()
-    require(n > 0, "PageRank needs a non-empty graph")
-    PreparedGraph(e, part, adj, nodes, n)
-  }
-
-  /** Per-node (teleport, initial rank), persisted: uniform over all
-    * nodes for PageRank, restricted to the in-graph seed set for
-    * TrustRank. Partitioned like the adjacency, so each round's final
-    * join stays narrow. Caller owns the unpersist. */
-  private def teleOf(g: PreparedGraph, seedsOpt: Option[DataFrame],
-                     dampingPct: Int)
-      : org.apache.spark.rdd.RDD[(Long, (Long, Long))] = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    seedsOpt match {
+  /** Per-node (teleport, initial rank), persisted with the graph:
+    * uniform over all nodes for PageRank, restricted to the in-graph
+    * seed set for TrustRank. Partitioned like the adjacency, so each
+    * round's final join stays narrow. */
+  private def teleOf(g: Graph, seedsOpt: Option[DataFrame], dampingPct: Int): Tele =
+    g.pin(seedsOpt match {
       case None =>
+        require(g.n > 0, "PageRank needs a non-empty graph")
         val t = Scale * (100L - dampingPct) / 100L / g.n
         val r0 = Scale / g.n
-        g.nodes.mapValues(_ => (t, r0)).persist(lvl)
+        g.nodes.mapValues(_ => (t, r0))
       case Some(seeds) =>
         val spark = seeds.sparkSession
         import spark.implicits._
@@ -238,610 +270,150 @@ object PageRank {
         val r0 = Scale / s
         g.nodes.leftOuterJoin(inGraph)
           .mapValues { case (_, m) => if (m.isDefined) (t, r0) else (0L, 0L) }
-          .persist(lvl)
-    }
-  }
+    })
 
-  /** The fixed-round rank chain over a prepared graph — one lazy
-    * lineage, evaluated when the caller materializes it. */
-  private def fixedRanks(g: PreparedGraph,
-                         tele: org.apache.spark.rdd.RDD[(Long, (Long, Long))],
-                         iterations: Int, dampingPct: Int)
-      : org.apache.spark.rdd.RDD[(Long, Long)] = {
-    var ranks = tele.mapValues(_._2)
-    for (_ <- 1 to iterations)
-      ranks = rankRound(g.adj, tele, g.part, dampingPct)(ranks)
-    ranks
-  }
+  /** The single-chain rank loop from `start`. */
+  private def rankIterate(g: Graph, tele: Tele, dampingPct: Int,
+                          start: Vec): Iterate[Vec] =
+    Iterate[Vec](_.vec(start))((r, k) =>
+      k.vec(rankRound(g.adj, tele, g.part, dampingPct)(r)))
 
-  private def rankDf(ranks: org.apache.spark.rdd.RDD[(Long, Long)],
-                     spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("rank_fp", LongType, nullable = false)))
-    spark.createDataFrame(ranks.map { case (v, r) => Row(v, r) }, schema)
-  }
-
-  private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
-                      seedsOpt: Option[DataFrame],
-                      iterations: Int, dampingPct: Int): DataFrame = {
-    require(iterations >= 1, "need iterations >= 1")
+  /** Prepares the graph and its teleport and hands `run` the rank loop. */
+  private def rankChain[A](edges: DataFrame, srcCol: String, dstCol: String,
+                           seeds: Option[DataFrame], dampingPct: Int)(
+                           run: (Graph, Iterate[Vec]) => A): A = {
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    val g = prepareGraph(edges, srcCol, dstCol)
-    val tele = teleOf(g, seedsOpt, dampingPct)
-    val ranks = fixedRanks(g, tele, iterations, dampingPct)
-    // Materialize the (node-set-sized, small) result eagerly, then drop
-    // every block the iteration pinned: the operator leaves the session
-    // as clean as it found it.
-    val out = rankDf(ranks, edges.sparkSession)
-      .orderBy(col("node"))
-      .pinned
-    g.unpersistAll()
-    tele.unpersist(false)
-    out
-  }
-
-  /** Tolerance-mode twin of [[iterate]] — identical per-round
-    * arithmetic (the bit-identity contract of [[ranksUntil]] rests on
-    * this), plus the per-round residual action the data-dependent stop
-    * requires. Each round's vector is persisted BEFORE the residual
-    * action so the next round's vote join reads blocks instead of
-    * re-walking the chain; the round-k vector is unpersisted as soon as
-    * round k+1 is materialized (two vectors live at any moment, the
-    * power-iteration memory floor). */
-  /** The tolerance-stopped rank chain over a prepared graph — returns
-    * the PERSISTED final vector (caller unpersists after materializing
-    * its result) and the stop round. */
-  private def untilRanks(g: PreparedGraph,
-                         tele: org.apache.spark.rdd.RDD[(Long, (Long, Long))],
-                         tolFp: Long, maxIterations: Int, dampingPct: Int)
-      : (org.apache.spark.rdd.RDD[(Long, Long)], Int) = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    var ranks = tele.mapValues(_._2).persist(lvl)
-    var stop = maxIterations
-    var k = 0
-    var converged = false
-    while (k < maxIterations && !converged) {
-      k += 1
-      val prev = ranks
-      val next = rankRound(g.adj, tele, g.part, dampingPct)(prev).persist(lvl)
-      // The residual action also materializes `next`'s blocks — one
-      // evaluation serves both the stop decision and the next round.
-      val l1 = next.join(prev)
-        .map { case (_, (a, b)) => math.abs(a - b) }.fold(0L)(_ + _)
-      prev.unpersist(false)
-      ranks = next
-      if (l1 < tolFp) { converged = true; stop = k }
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      val tele = teleOf(g, seeds, dampingPct)
+      run(g, rankIterate(g, tele, dampingPct, tele.mapValues(_._2)))
     }
-    (ranks, stop)
   }
 
-  private def iterateUntil(edges: DataFrame, srcCol: String, dstCol: String,
-                           seedsOpt: Option[DataFrame], tolFp: Long,
-                           maxIterations: Int, dampingPct: Int)
-      : (DataFrame, Int) = {
+  private def rankUntil(tolFp: Long, maxIterations: Int)
+      : (Graph, Iterate[Vec]) => (DataFrame, Int) = {
     require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
-    require(maxIterations >= 1, "need maxIterations >= 1")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    val g = prepareGraph(edges, srcCol, dstCol)
-    val tele = teleOf(g, seedsOpt, dampingPct)
-    val (ranks, stop) = untilRanks(g, tele, tolFp, maxIterations, dampingPct)
-    val out = rankDf(ranks, edges.sparkSession)
-      .orderBy(col("node"))
-      .pinned
-    g.unpersistAll()
-    tele.unpersist(false); ranks.unpersist(false)
-    (out, stop)
+    (g, it) => it.until(maxIterations)(l1(_, _) < tolFp)((r, k) =>
+      (g.result(r, "node", "rank_fp"), k))
   }
 
-  /** F130: convergence residuals for the fixed-iteration contract
-    * (`part_pagerank_convergence` query) — every rank operator here runs
-    * a FIXED round count ([[ranks]], [[seededRanks]], [[hits]],
-    * [[graft.analytics.Lpa]]), defended until now by argument
-    * ("converged here"). This emits the per-round L1/L∞ residuals and
-    * changed-node counts, so "10 rounds suffice" is a measured decay
-    * curve: round k's row is Σ|r_k − r_{k−1}|, max|r_k − r_{k−1}|, and
-    * #{v : r_k(v) ≠ r_{k−1}(v)}, all in the same `Scale` fixed-point
-    * units as the ranks themselves — integer arithmetic end-to-end, so
-    * the full curve hash-matches the oracle's unrolled replay.
-    *
-    * Execution shape: the [[ranks]] loop plus one narrow co-partitioned
-    * join per round (r_k ⋈ r_{k−1}, both hash-partitioned by `part`) —
-    * NO extra action per round: per-round delta triples reduce by their
-    * round tag and the whole curve materializes in ONE job whose
-    * shuffle outputs are shared with the rank chain. Output is
-    * `iterations` rows — config-scale, never node-scale. */
-  def convergence(edges: DataFrame, srcCol: String, dstCol: String,
-                  iterations: Int = 10, dampingPct: Int = 85): DataFrame = {
-    require(iterations >= 1, "need iterations >= 1")
+  /** The fused (pr, tr) loop of the spam-mass faces over one prepared
+    * graph; `run` also gets the two single-chain teleports. */
+  private def pairChain[A](edges: DataFrame, srcCol: String, dstCol: String,
+                           seeds: DataFrame, seedCol: String, dampingPct: Int)(
+                           run: (Graph, Tele, Tele, Iterate[Pair]) => A): A = {
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    val spark = edges.sparkSession
-    val g = prepareGraph(edges, srcCol, dstCol)
-    val (adj, part) = (g.adj, g.part)
-    val tele = teleOf(g, None, dampingPct)
-    var ranks = tele.mapValues(_._2)
-    // The F130 raw-persist discipline (r17, mirroring Lpa.convergence's
-    // measured rationale): each round's vector feeds THREE consumers —
-    // the next round's contribution stage, its own delta join, and the
-    // next delta's prev side. The contribution SHUFFLE's map outputs are
-    // shared across stages regardless, but every unpersisted reference
-    // re-runs the round's reduce (the Σ-contributions aggregation) in
-    // its consuming stage — ~3 reduces per round instead of one.
-    // Persisting each round turns the re-reads into block fetches;
-    // blocks drop before return (node-vector-sized, tiny).
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    var pinnedRounds = List.empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    var deltas = List.empty[org.apache.spark.rdd.RDD[(Long, (Long, Long, Long))]]
-    for (k <- 1 to iterations) {
-      val prev = ranks
-      val next = rankRound(adj, tele, part, dampingPct)(prev).persist(lvl)
-      pinnedRounds ::= next
-      deltas ::= next.join(prev).map { case (_, (a, b)) =>
-        val d = math.abs(a - b)
-        (k.toLong, (d, d, if (d != 0L) 1L else 0L))
-      }
-      ranks = next
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      val telePr = teleOf(g, None, dampingPct)
+      val teleTr = teleOf(g, Some(seeds.select(col(seedCol).cast("long"))), dampingPct)
+      val tele2 = g.pin(telePr.join(teleTr))
+      run(g, telePr, teleTr, Iterate[Pair](k =>
+          k.vec(tele2.mapValues { case ((_, rp), (_, rt)) => (rp, rt) }))((r, k) =>
+        k.vec(rankRound2(g.adj, tele2, g.part, dampingPct)(r))))
     }
-    val curve = spark.sparkContext.union(deltas.reverse)
-      .reduceByKey((a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3))
-    val schema = StructType(Seq(
-      StructField("round", LongType, nullable = false),
-      StructField("l1_delta_fp", LongType, nullable = false),
-      StructField("linf_delta_fp", LongType, nullable = false),
-      StructField("n_changed", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        curve.map { case (k, (s, m, c)) => Row(k, s, m, c) }, schema)
-      .orderBy(col("round"))
-      .pinned
-    g.unpersistAll()
-    tele.unpersist(false)
-    pinnedRounds.foreach(_.unpersist(false))
-    out
   }
 
-  /** [EXT] Spam mass (Gyöngyi et al. 2006, `trust_propagation` query):
-    * how much of a node's PageRank is NOT accounted for by trust flowing
-    * from the seed set. Both rank vectors carry total mass ≈ `Scale`
-    * (matched teleport totals), so the comparison is direct:
-    * spam_mass_ppm = max(0, pr − tr)·10⁶ ∕ pr in integer parts-per-
-    * million — near 10⁶ means the node's rank comes almost entirely from
-    * outside the trusted neighborhood (the spam signal); trusted hubs
-    * sit near 0. Long arithmetic end-to-end (pr ≤ Scale = 10¹², ×10⁶
-    * stays far under Long.Max), bit-identical in the oracle.
-    *
-    * This fixed-round face is the ORACLE twin (an unrolled SQL chain
-    * needs a static round count); the production default is
-    * [[spamMassUntil]], whose two chains each stop on their own
-    * measured residual curve (r14, the r13 verdict's #2). */
-  def spamMass(edges: DataFrame, srcCol: String, dstCol: String,
-               seeds: DataFrame, seedCol: String,
-               iterations: Int = 10, dampingPct: Int = 85): DataFrame = {
-    require(iterations >= 1, "need iterations >= 1")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    // Both rank vectors iterate over the same graph — prepare it ONCE
-    // (r16): the former shape pinned the edge derivation and then called
-    // ranks()/seededRanks() back-to-back, each rebuilding the edge
-    // persist, the adjacency groupByKey and the node-set shuffle over
-    // the same pinned edges (guide §2.4 — the two chains share every
-    // piece of that state; only their teleport vectors differ).
-    // prepareGraph's own persist now materializes the derivation once,
-    // so the former extra localCheckpoint pass is gone too.
-    val g = prepareGraph(edges.select(col(srcCol), col(dstCol)),
-      srcCol, dstCol)
-    val telePr = teleOf(g, None, dampingPct)
-    val teleTr = teleOf(g,
-      Some(seeds.select(col(seedCol).cast("long"))), dampingPct)
-    // The two chains iterate the same adjacency — run them as ONE fused
-    // loop over (pr, tr) pairs ([[rankRound2]], r17): 10 joint rounds
-    // instead of 20, one contribution shuffle per round instead of two,
-    // and the final pr⋈tr node join disappears (the pair is already on
-    // one row). Componentwise arithmetic is the single-chain round's,
-    // so both vectors are bit-identical to the sequential twins.
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val tele2 = telePr.join(teleTr).persist(lvl)
-    var ranks = tele2.mapValues { case ((_, rp), (_, rt)) => (rp, rt) }
-    for (_ <- 1 to iterations)
-      ranks = rankRound2(g.adj, tele2, g.part, dampingPct)(ranks)
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("pr_fp", LongType, nullable = false),
-      StructField("tr_fp", LongType, nullable = false)))
-    val both = edges.sparkSession.createDataFrame(
-        ranks.map { case (v, (p, t)) => Row(v, p, t) }, schema)
-      .pinned
-    g.unpersistAll()
-    telePr.unpersist(false); teleTr.unpersist(false)
-    tele2.unpersist(false)
-    both
-      // DIV, not `/`: Spark's `/` on longs is double division — the
-      // truncating integer quotient is what the oracle replays.
-      .withColumn("spam_mass_ppm",
-        expr("CASE WHEN pr_fp > 0 THEN " +
-          "greatest(pr_fp - tr_fp, 0L) * 1000000L DIV pr_fp ELSE 0L END"))
-      .orderBy(col("node"))
-  }
+  /** Σ|a − b| over two co-partitioned vectors — one narrow join, one action. */
+  private def l1(a: Vec, b: Vec): Long =
+    a.join(b).map { case (_, (x, y)) => math.abs(x - y) }.fold(0L)(_ + _)
 
-  /** PRODUCTION face of the spam-mass triple (r14, the r13 verdict's
-    * #2): both rank vectors tolerance-stopped, each on its OWN residual
-    * curve (open PageRank spreads mass everywhere, seeded trust
-    * concentrates — they decay at different rates, so the two stop
-    * rounds are independent). Defaults from the measured F130/F137
-    * curves: tolFp = 10⁶ fp units = one millionth of either vector's
-    * total mass — the family tolerance every earlystop oracle pins;
-    * `maxIterations` is a safety rail. Output (node, pr_fp, tr_fp,
-    * spam_mass_ppm, pr_stop, tr_stop); each vector is BIT-identical to
-    * its fixed-round twin at `iterations = *_stop` (the shared
-    * [[rankRound]] body). Fixed-round twin: [[spamMass]]. */
-  def spamMassUntil(edges: DataFrame, srcCol: String, dstCol: String,
-                    seeds: DataFrame, seedCol: String,
-                    tolFp: Long = 1000000L, maxIterations: Int = 50,
-                    dampingPct: Int = 85): DataFrame = {
-    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
-    require(maxIterations >= 1, "need maxIterations >= 1")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    // Both rank vectors iterate over the same graph — prepare it once
-    // for both tolerance chains (r16, see [[spamMass]]).
-    val g = prepareGraph(edges.select(col(srcCol), col(dstCol)),
-      srcCol, dstCol)
-    val telePr = teleOf(g, None, dampingPct)
-    val teleTr = teleOf(g,
-      Some(seeds.select(col(seedCol).cast("long"))), dampingPct)
-    // Fused tolerance loop (r17, see [[spamMass]]): joint (pr, tr)
-    // rounds while BOTH chains are unconverged — one contribution
-    // shuffle and ONE residual action per round serve both stop
-    // decisions — then the unconverged chain finishes alone on the
-    // single-chain round (the other's vector frozen). Per-chain
-    // arithmetic, residuals and stop rules are the single-chain loop's,
-    // so vectors and stop rounds are bit-identical to the sequential
-    // twins (PageRankSpec pins this).
-    val (ranks, kPr, kTr) =
-      untilRanksPair(g, telePr, teleTr, tolFp, maxIterations, dampingPct)
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("pr_fp", LongType, nullable = false),
-      StructField("tr_fp", LongType, nullable = false)))
-    val both = edges.sparkSession.createDataFrame(
-        ranks.map { case (v, (p, t)) => Row(v, p, t) }, schema)
-      .pinned
-    g.unpersistAll()
-    telePr.unpersist(false); teleTr.unpersist(false)
-    ranks.unpersist(false)
-    both
-      // DIV, not `/`: Spark's `/` on longs is double division — the
-      // truncating integer quotient is what the oracle replays.
-      .withColumn("spam_mass_ppm",
-        expr("CASE WHEN pr_fp > 0 THEN " +
-          "greatest(pr_fp - tr_fp, 0L) * 1000000L DIV pr_fp ELSE 0L END"))
-      .select(col("node"), col("pr_fp"), col("tr_fp"),
-        col("spam_mass_ppm"),
-        lit(kPr.toLong).as("pr_stop"), lit(kTr.toLong).as("tr_stop"))
-      .orderBy(col("node"))
-  }
+  private def flat(v: Pair) = v.map { case (n, (p, t)) => (n, p, t) }
 
-  /** The fused two-chain tolerance loop behind [[spamMassUntil]]:
-    * joint [[rankRound2]] rounds while both chains are live (one
-    * residual action computes BOTH L1s), then the straggler chain
-    * continues alone under [[rankRound]] with the other's vector
-    * frozen. Returns the persisted (pr, tr) vector (caller unpersists)
-    * and the two stop rounds. Each chain's vector and stop round are
-    * bit-identical to [[untilRanks]] run on that chain alone: the
-    * componentwise round arithmetic is the same, the residual is the
-    * same integer sum, and freezing a converged chain is exactly what
-    * "its loop ended" means. */
-  private def untilRanksPair(g: PreparedGraph,
-      telePr: org.apache.spark.rdd.RDD[(Long, (Long, Long))],
-      teleTr: org.apache.spark.rdd.RDD[(Long, (Long, Long))],
-      tolFp: Long, maxIterations: Int, dampingPct: Int)
-      : (org.apache.spark.rdd.RDD[(Long, (Long, Long))], Int, Int) = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val tele2 = telePr.join(teleTr).persist(lvl)
-    var ranks = tele2.mapValues { case ((_, rp), (_, rt)) => (rp, rt) }
-      .persist(lvl)
-    var k = 0
-    var kPr = maxIterations
-    var kTr = maxIterations
-    var prDone = false
-    var trDone = false
-    while (k < maxIterations && !prDone && !trDone) {
-      k += 1
-      val prev = ranks
-      val next = rankRound2(g.adj, tele2, g.part, dampingPct)(prev).persist(lvl)
-      val (l1p, l1t) = next.join(prev).map { case (_, ((ap, at), (bp, bt))) =>
-        (math.abs(ap - bp), math.abs(at - bt))
-      }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
-      prev.unpersist(false)
-      ranks = next
-      if (l1p < tolFp) { prDone = true; kPr = k }
-      if (l1t < tolFp) { trDone = true; kTr = k }
-    }
-    if (prDone != trDone && k < maxIterations) {
-      val frozenIsPr = prDone
-      val frozen = ranks.mapValues(v => if (frozenIsPr) v._1 else v._2)
-        .persist(lvl)
-      var single = ranks.mapValues(v => if (frozenIsPr) v._2 else v._1)
-        .persist(lvl)
-      val teleS = if (frozenIsPr) teleTr else telePr
-      var done = false
-      while (k < maxIterations && !done) {
-        k += 1
-        val prev = single
-        val next = rankRound(g.adj, teleS, g.part, dampingPct)(prev)
-          .persist(lvl)
-        val l1 = next.join(prev).map { case (_, (a, b)) => math.abs(a - b) }
-          .fold(0L)(_ + _)
-        prev.unpersist(false)
-        single = next
-        if (l1 < tolFp) { done = true }
-      }
-      if (done) { if (frozenIsPr) kTr = k else kPr = k }
-      val joined = frozen.join(single).mapValues { case (f, s) =>
-        if (frozenIsPr) (f, s) else (s, f)
-      }.persist(lvl)
-      joined.count()
-      ranks.unpersist(false); frozen.unpersist(false); single.unpersist(false)
-      ranks = joined
-    }
-    tele2.unpersist(false)
-    (ranks, kPr, kTr)
-  }
+  // DIV, not `/`: Spark's `/` on longs is double division — the
+  // truncating integer quotient is what the oracle replays.
+  private def spamPpm: Column = expr("CASE WHEN pr_fp > 0 THEN " +
+    "greatest(pr_fp - tr_fp, 0L) * 1000000L DIV pr_fp ELSE 0L END")
 
   /** [EXT] HITS hubs & authorities (Kleinberg 1999) in the same
-    * integer fixed-point discipline as [[ranks]] — the OTHER classic
-    * link-analysis pair next to PageRank/TrustRank: authority(v) =
+    * integer fixed-point discipline as [[ranks]]: authority(v) =
     * Σ hub(u) over in-edges u→v, hub(u) = Σ auth(v) over out-edges,
-    * each vector L1-normalized to `Scale` after its half-step (the
-    * sum-normalized HITS variant — rankings are normalization-
-    * invariant, and an L1 step is exact integer arithmetic where L2
-    * would need a square root). The normalizing multiply x·Scale runs
-    * in BigInt (x ≤ ΣX can exceed Long·Scale) and floors — DuckDB's
-    * HUGEINT `//` replays it exactly, so the query carries a full
-    * oracle like the rest of the rank family.
-    *
-    * Same execution shape as [[ranks]]: adjacency hash-partitioned
-    * once, one exchange per half-step; the per-half-step L1 total is
-    * one action over the node-set-sized vector. On a SYMMETRIC graph
-    * hub == auth every round (each half-step sees identical
-    * neighborhoods) — run it on a DIRECTED graph, e.g. the bipartite
-    * order→part projection ([[orderPartHits]]). */
-  /** ONE HITS half-step over the prepared graph — the raw-sum /
-    * L1-total / BigInt-normalize arithmetic shared STRUCTURALLY by
-    * [[hits]], [[hitsConvergence]] and [[hitsUntil]] (r13 review: the
-    * bit-identity contracts hold by construction). Returns (raw sums —
-    * persisted, the caller owns the drop —, normalized vector — LAZY;
-    * tolerance callers persist it themselves). The total is one action
-    * over the persisted raw frame. */
-  /** The prepared HITS graph state: edges persisted, both adjacency
-    * directions hash-partitioned with per-node dedup, node set
-    * co-partitioned, |V| counted. Extracted (r17) so [[hits]],
-    * [[hitsUntil]] and [[hitsConvergence]] share ONE prep instead of
-    * three hand-mirrored copies — the same drift-risk class the r16
-    * advisor flagged for the RefinedWeb stage builders. (A cogroup
-    * fusing all three RDDs into one shuffle was A/B-probed and is not
-    * faster — see [[prepareGraph]]'s note — so the shape is unchanged.) */
-  private final case class HitsGraph(
-      e: DataFrame, part: HashPartitioner,
-      adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      radj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      nodes: org.apache.spark.rdd.RDD[(Long, Unit)], n: Long) {
-    def unpersistAll(): Unit = {
-      e.unpersist(false); adj.unpersist(false); radj.unpersist(false)
-      nodes.unpersist(false); ()
+    * each vector L1-normalized to `Scale` after its half-step (rankings
+    * are normalization-invariant, and an L1 step is exact integer
+    * arithmetic where L2 would need a square root). Output (node,
+    * hub_fp, auth_fp) ordered by node; rows with a null endpoint are
+    * dropped, and a graph with no nodes throws IllegalArgumentException.
+    * On a SYMMETRIC graph hub == auth every round — run it on a DIRECTED
+    * graph, e.g. the bipartite order→part projection ([[orderPartHits]]). */
+  def hits(edges: DataFrame, srcCol: String, dstCol: String,
+           iterations: Int = 10): DataFrame =
+    hitsChain(edges, srcCol, dstCol)((g, it) => it.fixed(iterations)(hubAuth(g)))
+
+  /** [EXT] [[hits]] with a convergence-driven early stop: iterate until
+    * the round's COMBINED L1 residual Σ|h_k − h_{k−1}| + Σ|a_k − a_{k−1}|
+    * drops below `tolFp`, or `maxIterations`. Returns ((node, hub_fp,
+    * auth_fp), stop round), BIT-identical to `hits(iterations = stop)`;
+    * the stop adds one action per round (both delta sums in one fold). */
+  def hitsUntil(edges: DataFrame, srcCol: String, dstCol: String,
+                tolFp: Long, maxIterations: Int = 50): (DataFrame, Int) = {
+    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
+    hitsChain(edges, srcCol, dstCol) { (g, it) =>
+      it.until(maxIterations) { case ((hub, auth), (prevHub, prevAuth)) =>
+        val (dh, da) = g.sc.union(Seq(
+            hub.join(prevHub).map { case (_, (a, b)) => (math.abs(a - b), 0L) },
+            auth.join(prevAuth).map { case (_, (a, b)) => (0L, math.abs(a - b)) }))
+          .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+        dh + da < tolFp
+      }((v, k) => (hubAuth(g)(v), k))
     }
   }
 
-  private def prepareHits(edges: DataFrame, srcCol: String,
-                          dstCol: String): HitsGraph = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .persist(lvl)
-    val nParts = graft.Par.graphParts(e, e.count())
-    val part = new HashPartitioner(nParts)
-    val adj = e.as[(Long, Long)].rdd
-      .groupByKey(part).mapValues(_.toArray.distinct.sorted).persist(lvl)
-    val radj = e.select(col("dst"), col("src")).as[(Long, Long)].rdd
-      .groupByKey(part).mapValues(_.toArray.distinct.sorted).persist(lvl)
-    val nodes = graft.Par.nodeSet(e, part).persist(lvl)
-    val n = nodes.count()
-    require(n > 0, "HITS needs a non-empty graph")
-    HitsGraph(e, part, adj, radj, nodes, n)
-  }
+  /** F136: the per-round convergence curve of [[hits]]
+    * (`order_part_hits_convergence`): (round, l1_hub_delta_fp,
+    * l1_auth_delta_fp), the L1 deltas of both normalized vectors in
+    * `Scale` units, `iterations` rows ordered by round. Round 1's
+    * authority delta is measured against the uniform start (hub and auth
+    * begin equal), mirroring the oracle's h0 join. */
+  def hitsConvergence(edges: DataFrame, srcCol: String, dstCol: String,
+                      iterations: Int = 10): DataFrame =
+    hitsChain(edges, srcCol, dstCol) { (g, it) =>
+      it.curve(iterations) { case (k, (hub, auth), (prevHub, prevAuth)) =>
+        Seq(hub.join(prevHub).map { case (_, (a, b)) => (k, (math.abs(a - b), 0L)) },
+          auth.join(prevAuth).map { case (_, (a, b)) => (k, (0L, math.abs(a - b))) })
+      } { ds =>
+        g.result(g.sc.union(ds.flatten).reduceByKey((x, y) => (x._1 + y._1, x._2 + y._2))
+            .map { case (k, (h, a)) => (k, h, a) },
+          "round", "l1_hub_delta_fp", "l1_auth_delta_fp")
+      }
+    }
 
-  private def hitsHalfStep(nodes: org.apache.spark.rdd.RDD[(Long, Unit)],
-                           part: HashPartitioner, lvl: StorageLevel)(
-                           vec: org.apache.spark.rdd.RDD[(Long, Long)],
-                           along: org.apache.spark.rdd.RDD[(Long, Array[Long])])
-      : (org.apache.spark.rdd.RDD[(Long, Long)],
-         org.apache.spark.rdd.RDD[(Long, Long)]) = {
-    val raw = along.join(vec)
+  /** ONE HITS half-step: raw sums along `along`, their L1 total, then the
+    * BigInt-normalized vector (x·Scale can exceed a Long; DuckDB's
+    * HUGEINT `//` replays the floor). The raw sums are persisted for the
+    * round: the total is an action, and without the persist every later
+    * total would recompute all earlier rounds. */
+  private def hitsHalfStep(g: Graph, keep: Keep)(
+      vec: Vec, along: RDD[(Long, Array[Long])]): Vec = {
+    val raw = keep.temp(along.join(vec)
       .flatMap { case (_, (outs, x)) =>
         if (x == 0L) Iterator.empty else outs.iterator.map(d => (d, x))
       }
-      .reduceByKey(part, _ + _)
-      .persist(lvl)
+      .reduceByKey(g.part, _ + _))
     val total = raw.map(_._2).fold(0L)(_ + _)
-    val normed = nodes.leftOuterJoin(raw).mapValues { case (_, o) =>
+    g.nodes.leftOuterJoin(raw).mapValues { case (_, o) =>
       val x = o.getOrElse(0L)
       if (total == 0L || x == 0L) 0L
       else (BigInt(x) * Scale / total).toLong
     }
-    (raw, normed)
   }
 
-  def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iterations: Int = 10): DataFrame = {
-    require(iterations >= 1, "need iterations >= 1")
-    val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val g = prepareHits(edges, srcCol, dstCol)
-    val (part, nodes, n) = (g.part, g.nodes, g.n)
-    val (adj, radj) = (g.adj, g.radj)
-    // Each half-step takes an ACTION (the L1 total), so unlike [[ranks]]
-    // — one lineage, one evaluation — the raw sums MUST be persisted:
-    // an unpersisted chain would recompute every earlier round at every
-    // total, O(iterations²) passes. One action per half-step (the
-    // fold); the normalized vector itself stays lazy — the NEXT step's
-    // fold evaluates it once from the persisted raw frame. Blocks drop
-    // in one sweep at the end (they are node-set-sized, tiny next to
-    // the corpus).
-    val pinnedRaws = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    def halfStep(vec: org.apache.spark.rdd.RDD[(Long, Long)],
-                 along: org.apache.spark.rdd.RDD[(Long, Array[Long])])
-        : org.apache.spark.rdd.RDD[(Long, Long)] = {
-      val (raw, normed) = hitsHalfStep(nodes, part, lvl)(vec, along)
-      pinnedRaws += raw
-      normed
+  /** The HITS loop over (hub, auth): both start uniform, each round is
+    * the double half-step. */
+  private def hitsChain[A](edges: DataFrame, srcCol: String, dstCol: String)(
+      run: (Graph, Iterate[(Vec, Vec)]) => A): A =
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      run(g, Iterate[(Vec, Vec)] { k =>
+        require(g.n > 0, "HITS needs a non-empty graph")
+        val r0 = Scale / g.n
+        val h = k.vec(g.nodes.mapValues(_ => r0))
+        (h, h)
+      } { case ((hub, _), k) =>
+        val auth = k.vec(hitsHalfStep(g, k)(hub, g.adj)) // Σ hub over in-edges
+        (k.vec(hitsHalfStep(g, k)(auth, g.radj)), auth)  // Σ auth over out-edges
+      })
     }
-    var hub = nodes.mapValues(_ => Scale / n)
-    var auth = hub
-    for (_ <- 1 to iterations) {
-      auth = halfStep(hub, adj)   // auth(v) = Σ hub over in-edges
-      hub = halfStep(auth, radj)  // hub(u) = Σ auth over out-edges
-    }
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("hub_fp", LongType, nullable = false),
-      StructField("auth_fp", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        hub.join(auth).map { case (v, (h, a)) => Row(v, h, a) }, schema)
-      .orderBy(col("node"))
-      .pinned
-    g.unpersistAll(); pinnedRaws.foreach(_.unpersist(false))
-    out
-  }
 
-  /** [EXT] Convergence-driven early stop for HITS (r13): iterate until
-    * the round's COMBINED L1 residual — Σ|h_k − h_{k−1}| +
-    * Σ|a_k − a_{k−1}| over the normalized vectors, the two columns the
-    * F136 curve measures — drops below `tolFp`, or `maxIterations`.
-    * Returns ((node, hub_fp, auth_fp), stop round), bit-identical to
-    * `hits(iterations = stop)` (spec-pinned): the half-step arithmetic
-    * is the same code, and the delta joins are read-only over the
-    * persisted normalized vectors. HITS already pays one action per
-    * half-step for its L1 normalization totals, so the stop adds only
-    * the two narrow node-scale delta sums per round. */
-  def hitsUntil(edges: DataFrame, srcCol: String, dstCol: String,
-                tolFp: Long, maxIterations: Int = 50): (DataFrame, Int) = {
-    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
-    require(maxIterations >= 1, "need maxIterations >= 1")
-    val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val g = prepareHits(edges, srcCol, dstCol)
-    val (part, nodes, n) = (g.part, g.nodes, g.n)
-    val (adj, radj) = (g.adj, g.radj)
-    // Tolerance mode persists each round's NORMALIZED vectors (the
-    // delta joins and the next half-step both read them) and drops the
-    // previous round's blocks as soon as the round's residual actions
-    // complete — like [[iterateUntil]], only the current pair stays
-    // live (r13 review: the former keep-everything pin grew by four
-    // node-vectors per round to function exit).
-    var hub = nodes.mapValues(_ => Scale / n).persist(lvl)
-    var auth = hub
-    var stop = maxIterations
-    var k = 0
-    var converged = false
-    while (k < maxIterations && !converged) {
-      k += 1
-      val prevHub = hub
-      val prevAuth = auth
-      val (rawA, auth0) = hitsHalfStep(nodes, part, lvl)(hub, adj)
-      auth = auth0.persist(lvl)
-      val (rawH, hub0) = hitsHalfStep(nodes, part, lvl)(auth, radj)
-      hub = hub0.persist(lvl)
-      // Both residuals in ONE action (r17): the two narrow delta joins
-      // ride one union fold — per-component integer sums identical to
-      // the former two folds, one per-round job instead of two (the
-      // fold also materializes this round's hub blocks; auth's were
-      // materialized by the second half-step's total).
-      val (dh, da) = {
-        val dhr = hub.join(prevHub)
-          .map { case (_, (a, b)) => (math.abs(a - b), 0L) }
-        val dar = auth.join(prevAuth)
-          .map { case (_, (a, b)) => (0L, math.abs(a - b)) }
-        spark.sparkContext.union(Seq(dhr, dar))
-          .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
-      }
-      // the folds materialized this round's normed blocks — raws and
-      // the previous vectors are no longer needed (round 1's prevAuth
-      // IS prevHub; the duplicate unpersist is a no-op)
-      rawA.unpersist(false); rawH.unpersist(false)
-      prevHub.unpersist(false); prevAuth.unpersist(false)
-      if (dh + da < tolFp) { converged = true; stop = k }
-    }
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("hub_fp", LongType, nullable = false),
-      StructField("auth_fp", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        hub.join(auth).map { case (v, (h, a)) => Row(v, h, a) }, schema)
-      .orderBy(col("node"))
-      .pinned
-    g.unpersistAll(); hub.unpersist(false); auth.unpersist(false)
-    (out, stop)
-  }
-
-  /** F136: HITS convergence residuals (`order_part_hits_convergence`) —
-    * the [[convergence]] contract for the double half-step: per round,
-    * L1 deltas of BOTH normalized vectors (hub and authority, in the
-    * same `Scale` fixed-point units), so the registered 5-round choice
-    * is a measured decay curve across all three iterative families
-    * (rank F130, labels F135, HITS here). Same loop as [[hits]] — the
-    * per-half-step L1-total actions and raw-persist discipline are
-    * inherited — plus one narrow co-partitioned delta join per vector
-    * per round; the delta triples reduce by round tag in ONE final job
-    * over the persisted raws. Output is `iterations` rows. Round 1's
-    * authority delta is measured against the uniform start (hub and
-    * auth begin equal), mirroring the oracle's h0 join. */
-  def hitsConvergence(edges: DataFrame, srcCol: String, dstCol: String,
-                      iterations: Int = 10): DataFrame = {
-    require(iterations >= 1, "need iterations >= 1")
-    val spark = edges.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val g = prepareHits(edges, srcCol, dstCol)
-    val (part, nodes, n) = (g.part, g.nodes, g.n)
-    val (adj, radj) = (g.adj, g.radj)
-    val pinnedRaws = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    def halfStep(vec: org.apache.spark.rdd.RDD[(Long, Long)],
-                 along: org.apache.spark.rdd.RDD[(Long, Array[Long])])
-        : org.apache.spark.rdd.RDD[(Long, Long)] = {
-      val (raw, normed) = hitsHalfStep(nodes, part, lvl)(vec, along)
-      pinnedRaws += raw
-      normed
-    }
-    var hub = nodes.mapValues(_ => Scale / n)
-    var auth = hub
-    var deltas = List.empty[org.apache.spark.rdd.RDD[(Long, (Long, Long))]]
-    for (k <- 1 to iterations) {
-      val prevHub = hub
-      val prevAuth = auth
-      auth = halfStep(hub, adj)
-      hub = halfStep(auth, radj)
-      val dh = hub.join(prevHub).map { case (_, (a, b)) =>
-        (k.toLong, (math.abs(a - b), 0L))
-      }
-      val da = auth.join(prevAuth).map { case (_, (a, b)) =>
-        (k.toLong, (0L, math.abs(a - b)))
-      }
-      deltas = da :: dh :: deltas
-    }
-    val curve = spark.sparkContext.union(deltas.reverse)
-      .reduceByKey((x, y) => (x._1 + y._1, x._2 + y._2))
-    val schema = StructType(Seq(
-      StructField("round", LongType, nullable = false),
-      StructField("l1_hub_delta_fp", LongType, nullable = false),
-      StructField("l1_auth_delta_fp", LongType, nullable = false)))
-    val out = spark.createDataFrame(
-        curve.map { case (k, (h, a)) => Row(k, h, a) }, schema)
-      .orderBy(col("round"))
-      .pinned
-    g.unpersistAll(); pinnedRaws.foreach(_.unpersist(false))
-    out
-  }
+  private def hubAuth(g: Graph)(v: (Vec, Vec)): DataFrame =
+    g.result(v._1.join(v._2).map { case (n, (h, a)) => (n, h, a) },
+      "node", "hub_fp", "auth_fp")
 
   /** [[hitsConvergence]] on the standing order→part bipartite fixture
     * (the [[orderPartHits]] 2k/2k+1 encoding). */
@@ -852,7 +424,7 @@ object PageRank {
           (col("l_partkey").cast("long") * 2 + 1).as("dst")),
         "src", "dst", iterations)
 
-  /** `order_part_hits_earlystop` query (r13): [[hitsUntil]] on the
+  /** `order_part_hits_earlystop` query: [[hitsUntil]] on the
     * standing bipartite fixture — the F136 curve put to work. The
     * default tolerance (3·10⁹ fp units combined hub+auth residual,
     * ~0.3% of the two Scale-normalized masses) is crossed at round 5 of
@@ -1077,7 +649,7 @@ object PageRank {
                             iterations: Int = 10): DataFrame =
     convergence(copurchaseEdges(lineitem), "src", "dst", iterations)
 
-  /** `part_pagerank_earlystop` query (r13): [[ranksUntil]] on the
+  /** `part_pagerank_earlystop` query: [[ranksUntil]] on the
     * standing co-purchase fixture — the F130 curve put to work. The
     * default tolerance (10⁶ fp units = one millionth of the total rank
     * mass) is crossed at round 7 of the registered 10 on the measured
@@ -1109,7 +681,7 @@ object PageRank {
         col("spam_mass_ppm"))
   }
 
-  /** `trust_propagation_earlystop` query (r13): the spam-mass triple
+  /** `trust_propagation_earlystop` query: the spam-mass triple
     * with BOTH rank vectors tolerance-stopped — F137 completed across
     * the fourth iterative family at query level. Each loop stops on its
     * OWN residual curve (the two decay at different rates: open

@@ -35,6 +35,33 @@ class PageRankSpec extends SparkSpec {
     val b = PageRank.ranks(base.union(base).repartition(13), "src", "dst")
       .collect().toSeq
     assert(a == b)
+    val dup = base.union(base).repartition(13)
+    assert(PageRank.hits(base.repartition(1), "src", "dst").collect().toSeq ==
+      PageRank.hits(dup, "src", "dst").collect().toSeq)
+    assert(Lpa.labelPropagation(base.repartition(1), "src", "dst").collect().toSeq ==
+      Lpa.labelPropagation(dup, "src", "dst").collect().toSeq)
+  }
+
+  test("edge contracts: empty edge sets and null endpoints") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      PageRank.ranks(empty, "src", "dst").collect()
+    }
+    intercept[IllegalArgumentException] {
+      PageRank.hits(empty, "src", "dst").collect()
+    }
+    assert(Lpa.labelPropagation(empty, "src", "dst").collect().isEmpty)
+    // a row with a null endpoint is dropped whole: node 7 never appears
+    val clean = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+    val withNulls = (clean.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Some(7L), None), (None, Some(7L)), (None, None))).toDF("src", "dst")
+    val cleanDf = clean.toDF("src", "dst")
+    assert(PageRank.ranks(withNulls, "src", "dst").collect().toSeq ==
+      PageRank.ranks(cleanDf, "src", "dst").collect().toSeq)
+    assert(PageRank.hits(withNulls, "src", "dst").collect().toSeq ==
+      PageRank.hits(cleanDf, "src", "dst").collect().toSeq)
+    assert(Lpa.labelPropagation(withNulls, "src", "dst").collect().toSeq ==
+      Lpa.labelPropagation(cleanDf, "src", "dst").collect().toSeq)
   }
 
   test("convergence curve == plain-Scala replay; residuals decay (F130)") {
@@ -179,6 +206,47 @@ class PageRankSpec extends SparkSpec {
     // the seed's own trust exceeds its open rank: ppm clamps at 0
     assert(out(1L)._3 == 0L)
     assert(out(2L)._3 < 500000L)
+  }
+
+  test("fused spam-mass loops == the single-chain faces run separately") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    // fixed rounds: pr_fp is ranks, tr_fp is seededRanks
+    val edges = sym((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (10L, 11L),
+      (11L, 12L), (10L, 12L), (4L, 10L))
+    val seeds = Seq(1L).toDF("v")
+    val fixed = PageRank.spamMass(edges, "src", "dst", seeds, "v", 7)
+    assert(rows(fixed.select("node", "pr_fp")) ==
+      rows(PageRank.ranks(edges, "src", "dst", 7)))
+    assert(rows(fixed.select("node", "tr_fp")) ==
+      rows(PageRank.seededRanks(edges, "src", "dst", seeds, "v", 7)))
+    // tolerance mode: each chain's vector and stop round equal its own
+    // loop's. In the first graph the PageRank chain stops first; in the
+    // second the seeds are a whole triangle, whose uniform trust is
+    // already stationary, so the trust chain stops first — both
+    // straggler directions run
+    val cases = Seq(
+      sym((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+        (6L, 4L)) -> Seq(1L),
+      sym((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L), (10L, 12L),
+        (12L, 13L), (13L, 14L)) -> Seq(1L, 2L, 3L))
+    val order = cases.map { case (g, s) =>
+      val sd = s.toDF("v")
+      val (pr, kPr) = PageRank.ranksUntil(g, "src", "dst", 1000000L, 40)
+      val (tr, kTr) = PageRank.seededRanksUntil(g, "src", "dst", sd, "v",
+        1000000L, 40)
+      val both = PageRank.spamMassUntil(g, "src", "dst", sd, "v",
+        1000000L, 40)
+      assert(kPr < 40 && kTr < 40)
+      assert(rows(both.select("node", "pr_fp")) == rows(pr))
+      assert(rows(both.select("node", "tr_fp")) == rows(tr))
+      val stops = both.select("pr_stop", "tr_stop").distinct().collect()
+      assert(stops.length == 1)
+      assert((stops.head.getLong(0), stops.head.getLong(1)) ==
+        ((kPr.toLong, kTr.toLong)))
+      kPr.compare(kTr).sign
+    }
+    assert(order.toSet == Set(-1, 1), s"stop orders $order")
   }
 
   test("more central part ranks higher in the copurchase graph") {
