@@ -40,7 +40,7 @@ object Bench {
     * broadcast/shuffle state promptly instead of whenever G1 gets around
     * to it.
     */
-  private def dropPersisted(spark: SparkSession): Unit = {
+  private[graft] def dropPersisted(spark: SparkSession): Unit = {
     val sc = spark.sparkContext
     // restore whatever level was in effect, not a hard-coded WARN — a run
     // configured at another verbosity shouldn't be silently reset here.

@@ -19,12 +19,8 @@ object BenchOne {
       // Same inter-query cleanup as Bench: leaked persist/localCheckpoint
       // blocks from iterative operators thrash later queries' storage
       // memory (observed 3-28× slowdowns) — exactly the misleading warm
-      // numbers this tool exists to avoid. The GC nudge clears the
-      // accumulated dead heap that otherwise inflates later CPU-heavy
-      // queries 2-3× (see Bench.dropPersisted).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      System.gc()
+      // numbers this tool exists to avoid.
+      Bench.dropPersisted(spark)
     }
     spark.stop()
   }

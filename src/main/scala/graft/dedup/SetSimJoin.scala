@@ -242,23 +242,6 @@ object SetSimJoin {
       .select(explode(col("toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("df"))
 
-  /** Empty state frames for a first batch (schemas of [[PrefixIndex]]). */
-  def emptyTokens(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", LongType),
-        StructField("toks", ArrayType(StringType)),
-        StructField("n", IntegerType))))
-  }
-
-  def emptyPrefixes(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", LongType),
-        StructField("n", IntegerType), StructField("i", IntegerType),
-        StructField("tok", StringType))))
-  }
-
   /** The index after absorbing a batch: the order stays FROZEN (the
     * documented efficiency-drift trade — rebuilding it would reorder
     * history prefixes and force a re-index), token arrays and prefix

@@ -593,7 +593,7 @@ object Unigram {
 
   /** The production fit entry: one knob selects the E-step family.
     *
-    * DEFAULT = `SoftEm` (r14, the r13 verdict's #3 decided): Kudo
+    * DEFAULT = `SoftEm`: Kudo
     * 2018's trainer IS soft-EM — the §2.2 M-step re-estimates piece
     * probabilities from forward-backward EXPECTED counts, and §3.2
     * prunes by each piece's likelihood-loss contribution; hard
@@ -604,36 +604,16 @@ object Unigram {
     * hash-pinned by `unigram_fit_divergence`. Queries that pin
     * hard-fit constants call [[fitPieces]] (or pass `HardEm`)
     * explicitly — the default steers NEW consumers to the faithful
-    * trainer.
-    *
-    * r16 (the r15 verdict's #6): `mode` is REQUIRED for one round. The
-    * r14 HardEm→SoftEm default flip was deliberate and spec-pinned
-    * in-repo, but silent for external callers compiled against the old
-    * default — this makes the migration compiler-visible (no-mode calls
-    * hit the deprecated bridge below and warn; mixed-shape calls
-    * without a mode fail to compile). The SoftEm default returns next
-    * round. */
+    * trainer. */
   def fit(docs: DataFrame, textCol: String, vocabSize: Int,
           maxPieceLen: Int = 6, emRounds: Int = 3, seedSize: Int = 2000,
           maxVocabWords: Int = 100000,
-          mode: FitMode): Seq[(String, Long)] = mode match {
+          mode: FitMode = SoftEm): Seq[(String, Long)] = mode match {
     case HardEm => fitPieces(docs, textCol, vocabSize, maxPieceLen,
       emRounds, seedSize, maxVocabWords)
     case SoftEm => fitPiecesSoftPruned(docs, textCol, vocabSize, maxPieceLen,
       emRounds, seedSize, maxVocabWords = maxVocabWords)
   }
-
-  /** One-round migration bridge for callers that relied on the defaulted
-    * mode: same behavior as the r14+ default (`SoftEm`), with a
-    * compile-time deprecation so the HardEm→SoftEm flip is VISIBLE at
-    * every call site instead of silent (r16, the r15 verdict's #6). */
-  @deprecated("Unigram.fit's defaulted mode flipped HardEm -> SoftEm in " +
-    "r14; state a FitMode explicitly — fit(..., mode = Unigram.SoftEm) " +
-    "keeps this call's behavior, fit(..., mode = Unigram.HardEm) restores " +
-    "the pre-r14 fit", "r16")
-  def fit(docs: DataFrame, textCol: String,
-          vocabSize: Int): Seq[(String, Long)] =
-    fit(docs, textCol, vocabSize, mode = SoftEm)
 
   private def pieceUdf(docs: DataFrame, pieces: Seq[(String, Long)],
                        maxPieceLen: Int) = {

@@ -285,6 +285,38 @@ class StreamingSpec extends SparkSpec {
     assert(idxRows.columns.toSeq == Seq("h", "keeper_doc_id", "keeper_idx"))
   }
 
+  test("sink-index state: an absent index is empty state, an unreadable one fails the batch") {
+    val root = java.nio.file.Files.createTempDirectory("graft_statereader").toString
+    val rows = Seq((1L, "alpha beta\n\nshared tail"), (2L, "gamma delta\n\nshared tail"))
+    def runOnce(dir: String): Unit = {
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/in")
+      val docs = spark.readStream.schema("doc_id LONG, text STRING").parquet(s"$dir/in")
+      StreamingIngest.paragraphDedupViaSinkIndex(docs, s"$dir/sink", s"$dir/idx",
+        s"$dir/ckpt").start().awaitTermination()
+    }
+    // no index path: the first batch runs against empty state
+    runOnce(s"$root/fresh")
+    val out = spark.read.parquet(s"$root/fresh/sink").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out == Map(1L -> "alpha beta\n\nshared tail", 2L -> "gamma delta"), s"$out")
+    assert(spark.read.parquet(s"$root/fresh/idx").count() == 3L)
+    // an index directory holding a part file that is not parquet: the
+    // read error fails the query instead of reading as empty state
+    val badIdx = new java.io.File(s"$root/bad/idx")
+    assert(badIdx.mkdirs())
+    java.nio.file.Files.write(new java.io.File(badIdx, "part-00000-garbage.parquet").toPath,
+      "not a parquet file".getBytes("UTF-8"))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      runOnce(s"$root/bad")
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(causes.contains("part-00000-garbage.parquet"), causes)
+    // and no row reached the sink
+    val badSink = new java.io.File(s"$root/bad/sink")
+    assert(!badSink.exists() || spark.read.parquet(badSink.getPath).count() == 0L)
+  }
+
   test("streaming substring dedup: cross-batch repeated passage drops via the window index") {
     val root = java.nio.file.Files.createTempDirectory("graft_subdedup").toString
     val (inDir, sink, idx, ckpt) = (s"$root/in", s"$root/sink", s"$root/idx", s"$root/ckpt")

@@ -68,12 +68,9 @@ class UnigramSoftSpec extends SparkSpec {
     val direct = Unigram.fitPiecesSoftPruned(docs, "text", 400)
     assert(viaMode == direct, "the mode switch must be a pure dispatch")
     assert(viaMode.size <= 400, s"vocab budget: ${viaMode.size}")
-    // r14: the DEFAULT is the Kudo-faithful soft trainer; r16 made the
-    // mode REQUIRED for one round (the r15 verdict's #6), so the
-    // no-mode shape is now the deprecated migration bridge — it must
-    // keep the SoftEm behavior it deprecates
-    assert((Unigram.fit(docs, "text", 400): @annotation.nowarn("cat=deprecation")) == direct,
-      "the deprecated no-mode bridge must keep SoftEm (r13 verdict #3)")
+    // the DEFAULT is the Kudo-faithful soft trainer
+    assert(Unigram.fit(docs, "text", 400) == direct,
+      "the defaulted mode must be SoftEm")
     val hard = Unigram.fit(docs, "text", 400, mode = Unigram.HardEm)
     assert(hard == Unigram.fitPieces(docs, "text", 400))
     // the promoted soft fit retains more of the requested budget than
