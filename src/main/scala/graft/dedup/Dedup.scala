@@ -106,12 +106,12 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       nullif(size(array_union(a, b)).cast("double"), lit(0.0))
 
-  /** Exact Jaccard for SORTED distinct arrays with known sizes: one codegen
+  /** Exact Jaccard for SORTED distinct arrays with known sizes: one native
     * merge walk ([[org.apache.spark.sql.graft.SortedIntersectSize]]) and
     * |A ∪ B| = |A| + |B| − |A ∩ B| — no per-pair hash sets or allocations.
-    * Identical value to [[jaccard]]; used on the hot verify path. */
-  /** Two empty sets → null (not an ANSI divide-by-zero error), matching
-    * the 0/0 → null behavior the filter then drops. */
+    * Identical value to [[jaccard]]; used on the hot verify path. Two empty
+    * sets → null (not an ANSI divide-by-zero error), matching the 0/0 →
+    * null behavior the filter then drops. */
   def jaccardSorted(a: Column, b: Column, na: Column, nb: Column): Column = {
     val inter = org.apache.spark.sql.graft.ArrayFunctions.sortedIntersectSize(a, b)
     inter.cast("double") / nullif((na + nb - inter).cast("double"), lit(0.0))

@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * that runs once per candidate pair (millions of rows), those per-row
   * allocations dominated the bench. Sorted inputs (we always produce token
   * sets with `array_sort(array_distinct(...))`) admit an allocation-free
-  * two-pointer walk, here generated into whole-stage codegen.
+  * two-pointer walk: [[SortedIntersectSizeBounded]]'s with a bound of 0,
+  * which never exits early.
   *
   * Contract: BOTH inputs must be sorted ascending and duplicate-free —
   * callers own this (Dedup.tokenSet guarantees it). Null elements are not
@@ -35,47 +36,12 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_sorted_intersect_size"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var n = 0L
-    while (i < nx && j < ny) {
-      if (x.isNullAt(i)) i += 1
-      else if (y.isNullAt(j)) j += 1
-      else {
-        val c = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-        if (c == 0) { n += 1; i += 1; j += 1 }
-        else if (c < 0) i += 1
-        else j += 1
-      }
-    }
-    n
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectSizeBounded.size(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], 0L)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      s"""
-         |int $i = 0; int $j = 0; long $n = 0L;
-         |while ($i < $a.numElements() && $j < $b.numElements()) {
-         |  if ($a.isNullAt($i)) { $i++; }
-         |  else if ($b.isNullAt($j)) { $j++; }
-         |  else {
-         |    int $c = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-         |    if ($c == 0) { $n++; $i++; $j++; }
-         |    else if ($c < 0) { $i++; } else { $j++; }
-         |  }
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"org.apache.spark.sql.graft.SortedIntersectSizeBounded.size($a, $b, 0L)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -87,7 +53,7 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   * The declarative form (nested `aggregate` holding a 64-wide ±1 counter
   * array updated via `zip_with` per token) allocates two arrays per token
   * per row and runs interpreted — it was a bench hotspot. This expression
-  * keeps the 64 counters in a primitive local array inside codegen.
+  * keeps the 64 counters in a primitive local array.
   *
   * Bit packing matches the declarative fold exactly (counter for hash bit
   * i lands at position 63−i): same long values, so signatures are stable
@@ -103,8 +69,17 @@ case class SimHash64(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash64"
 
-  override def nullSafeEval(v: Any): Any = {
-    val hs = v.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any): Any = SimHash64.hash(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"org.apache.spark.sql.graft.SimHash64.hash($v)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  def hash(hs: ArrayData): Long = {
     val counters = new Array[Int](64)
     var i = 0
     while (i < hs.numElements()) {
@@ -123,34 +98,6 @@ case class SimHash64(child: Expression)
     while (b < 64) { out = (out << 1) | (if (counters(b) > 0) 1L else 0L); b += 1 }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val c = ctx.freshName("counters")
-      val out = ctx.freshName("out")
-      s"""
-         |int[] $c = new int[64];
-         |for (int $i = 0; $i < $v.numElements(); $i++) {
-         |  if (!$v.isNullAt($i)) {
-         |    long $h = $v.getLong($i);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      $c[$b] += (((($h >>> $b) & 1L) == 1L) ? 1 : -1);
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  $out = ($out << 1) | (($c[$b] > 0) ? 1L : 0L);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** [[SortedIntersectSize]] with an early-exit lower bound: the walk stops
@@ -178,10 +125,21 @@ case class SortedIntersectSizeBounded(
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_sorted_intersect_size_bounded"
 
-  override def nullSafeEval(a: Any, b: Any, m: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val minInter = m.asInstanceOf[Long]
+  override def nullSafeEval(a: Any, b: Any, m: Any): Any =
+    SortedIntersectSizeBounded.size(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], m.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b, m) =>
+      s"org.apache.spark.sql.graft.SortedIntersectSizeBounded.size($a, $b, $m)")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object SortedIntersectSizeBounded {
+  def size(x: ArrayData, y: ArrayData, minInter: Long): Long = {
     val nx = x.numElements()
     val ny = y.numElements()
     var i = 0
@@ -201,36 +159,6 @@ case class SortedIntersectSizeBounded(
     }
     n
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, m) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      s"""
-         |int $i = 0; int $j = 0; long $n = 0L;
-         |while ($i < $a.numElements() && $j < $b.numElements()) {
-         |  if ($a.isNullAt($i)) { $i++; }
-         |  else if ($b.isNullAt($j)) { $j++; }
-         |  else {
-         |    int $c = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-         |    if ($c == 0) { $n++; $i++; $j++; }
-         |    else {
-         |      if ($c < 0) { $i++; } else { $j++; }
-         |      if ($n + java.lang.Math.min($a.numElements() - $i, $b.numElements() - $j) < $m) {
-         |        break;
-         |      }
-         |    }
-         |  }
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** Index of the first position where two `array<long>` columns hold equal
@@ -255,9 +183,19 @@ case class FirstEqualIndex(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_first_equal_index"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FirstEqualIndex.index(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.FirstEqualIndex.index($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object FirstEqualIndex {
+  def index(x: ArrayData, y: ArrayData): Int = {
     val n = math.min(x.numElements(), y.numElements())
     var i = 0
     while (i < n) {
@@ -266,27 +204,6 @@ case class FirstEqualIndex(left: Expression, right: Expression)
     }
     -1
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val res = ctx.freshName("res")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $res = -1;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i) && $a.getLong($i) == $b.getLong($i)) {
-         |    $res = $i; break;
-         |  }
-         |}
-         |${ev.value} = $res;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** `\S+` tokenization as a byte-level scan — value-identical to

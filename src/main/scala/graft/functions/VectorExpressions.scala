@@ -3,24 +3,27 @@
 // `ExpressionUtils.column` to wrap an Expression into a public Column) are
 // private[sql]. This is the established pattern for external Spark
 // expression libraries; no Spark internals are modified.
+//
+// Every expression here keeps its row loop once, as a method on its
+// companion object: `nullSafeEval` calls it directly and `doGenCode`
+// generates one static call to it, so both eval paths run the same kernel.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
 
-/** Native codegen dot product over two `array<double>` columns.
+/** Native dot product over two `array<double>` columns.
   *
   * Why not `aggregate(zip_with(a, b, _*_), 0.0, _+_)`: higher-order
   * functions evaluate interpreted (one closure call + boxed lambda variable
   * per element) and allocate an intermediate array per row. Inside an
   * all-pairs similarity join the dot product runs |A|·|B| times, and the
   * interpreted form was the bench bottleneck (~40 s for 2M pairs × 64 dims
-  * at sf0.1). This expression generates a tight primitive loop inside
+  * at sf0.1). This expression is one tight primitive loop called from
   * whole-stage codegen: same left-to-right IEEE summation order as the HOF
   * form AND DuckDB's `list_reduce`, so oracle results stay bit-identical.
   *
@@ -35,9 +38,22 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"org.apache.spark.sql.graft.DotProduct.dot($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+
+  /** Σ x(i)·y(i) over the shorter prefix, left to right; a null element
+    * on either side contributes 0.0. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -48,26 +64,15 @@ case class DotProduct(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** Σ x(i)·p(i) over the shorter prefix, left to right, against a
+    * driver-held row of a plane or centroid matrix. */
+  def dot(x: ArrayData, p: Array[Double]): Double = {
+    val n = math.min(x.numElements(), p.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getDouble(i) * p(i); i += 1 }
+    s
+  }
 }
 
 /** All random-hyperplane LSH table buckets for one vector, in one pass.
@@ -80,18 +85,18 @@ case class DotProduct(left: Expression, right: Expression)
   * sign-bucket per table via a tight FMA loop.
   *
   * Bucket bit j of table t = [v · planes(t·bits + j) > 0] — identical
-  * semantics (and values) to the composed form.
+  * semantics (and values) to the composed form. A bucket is one long, so
+  * `bitsPerTable` must lie in 1..64.
   */
 case class LshTableBuckets(
     child: Expression,
     planes: IndexedSeq[IndexedSeq[Double]],
     bitsPerTable: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes {
 
+  require(bitsPerTable >= 1 && bitsPerTable <= 64, "bitsPerTable must be in 1..64")
   require(planes.nonEmpty && planes.length % bitsPerTable == 0,
     "planes must split evenly into tables of bitsPerTable")
-  private val numTables = planes.length / bitsPerTable
   @transient private lazy val planeMatrix: Array[Array[Double]] =
     planes.map(_.toArray).toArray
 
@@ -99,60 +104,35 @@ case class LshTableBuckets(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_lsh_buckets"
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val dim = x.numElements()
-    val out = new Array[Long](numTables)
+  override def nullSafeEval(v: Any): Any =
+    LshTableBuckets.buckets(v.asInstanceOf[ArrayData], planeMatrix, bitsPerTable)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("planes", planeMatrix, "double[][]")
+    defineCodeGen(ctx, ev, v =>
+      s"org.apache.spark.sql.graft.LshTableBuckets.buckets($v, $planesRef, $bitsPerTable)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object LshTableBuckets {
+  def buckets(x: ArrayData, planes: Array[Array[Double]], bitsPerTable: Int): ArrayData = {
+    val out = new Array[Long](planes.length / bitsPerTable)
     var t = 0
-    while (t < numTables) {
+    while (t < out.length) {
       var bucket = 0L
       var b = 0
       while (b < bitsPerTable) {
-        val p = planeMatrix(t * bitsPerTable + b)
-        val n = math.min(dim, p.length)
-        var s = 0.0
-        var i = 0
-        while (i < n) { s += x.getDouble(i) * p(i); i += 1 }
-        if (s > 0) bucket |= (1L << b)
+        if (DotProduct.dot(x, planes(t * bitsPerTable + b)) > 0) bucket |= (1L << b)
         b += 1
       }
       out(t) = bucket
       t += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planeMatrix, "double[][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val t = ctx.freshName("t")
-      val b = ctx.freshName("b")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val p = ctx.freshName("p")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val bucket = ctx.freshName("bucket")
-      s"""
-         |long[] $out = new long[$numTables];
-         |for (int $t = 0; $t < $numTables; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $b = 0; $b < $bitsPerTable; $b++) {
-         |    double[] $p = $planesRef[$t * $bitsPerTable + $b];
-         |    int $n = java.lang.Math.min($v.numElements(), $p.length);
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) { $s += $v.getDouble($i) * $p[$i]; }
-         |    if ($s > 0) $bucket |= (1L << $b);
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** The `nprobe` nearest centroids (by squared L2 distance, centroid-id
@@ -174,13 +154,11 @@ case class NearestCentroids(
     child: Expression,
     centers: IndexedSeq[IndexedSeq[Double]],
     nprobe: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(centers.nonEmpty && nprobe >= 1,
     "need at least one centroid and nprobe >= 1")
-  private val numCenters = centers.length
-  private val take = math.min(nprobe, numCenters)
+  private val take = math.min(nprobe, centers.length)
   @transient private lazy val centerMatrix: Array[Array[Double]] =
     centers.map(_.toArray).toArray
   @transient private lazy val cnorm2: Array[Double] =
@@ -190,20 +168,29 @@ case class NearestCentroids(
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_nearest_centroids"
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val dim = x.numElements()
+  override def nullSafeEval(v: Any): Any =
+    NearestCentroids.nearest(v.asInstanceOf[ArrayData], centerMatrix, cnorm2, take)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centersRef = ctx.addReferenceObj("centers", centerMatrix, "double[][]")
+    val cnorm2Ref = ctx.addReferenceObj("cnorm2", cnorm2, "double[]")
+    defineCodeGen(ctx, ev, v => "org.apache.spark.sql.graft.NearestCentroids" +
+      s".nearest($v, $centersRef, $cnorm2Ref, $take)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object NearestCentroids {
+  def nearest(x: ArrayData, centers: Array[Array[Double]], cnorm2: Array[Double],
+              take: Int): ArrayData = {
     val bestScore = new Array[Double](take)
     val bestId = new Array[Int](take)
     var filled = 0
     var c = 0
-    while (c < numCenters) {
-      val p = centerMatrix(c)
-      val n = math.min(dim, p.length)
-      var d = 0.0
-      var i = 0
-      while (i < n) { d += x.getDouble(i) * p(i); i += 1 }
-      val s = cnorm2(c) - 2.0 * d
+    while (c < centers.length) {
+      val s = cnorm2(c) - 2.0 * DotProduct.dot(x, centers(c))
       // Insertion keeps (score asc, cid asc): strictly-less shifts, so an
       // equal score never displaces an earlier (smaller) centroid id.
       if (filled < take || s < bestScore(filled - 1)) {
@@ -216,62 +203,17 @@ case class NearestCentroids(
       }
       c += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      java.util.Arrays.copyOf(bestId, filled))
+    ArrayData.toArrayData(java.util.Arrays.copyOf(bestId, filled))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centersRef = ctx.addReferenceObj("centers", centerMatrix, "double[][]")
-    val cnorm2Ref = ctx.addReferenceObj("cnorm2", cnorm2, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val s = ctx.freshName("s")
-      val p = ctx.freshName("p")
-      val bestScore = ctx.freshName("bestScore")
-      val bestId = ctx.freshName("bestId")
-      val filled = ctx.freshName("filled")
-      s"""
-         |double[] $bestScore = new double[$take];
-         |int[] $bestId = new int[$take];
-         |int $filled = 0;
-         |for (int $c = 0; $c < $numCenters; $c++) {
-         |  double[] $p = $centersRef[$c];
-         |  int $n = java.lang.Math.min($v.numElements(), $p.length);
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) { $d += $v.getDouble($i) * $p[$i]; }
-         |  double $s = $cnorm2Ref[$c] - 2.0 * $d;
-         |  if ($filled < $take || $s < $bestScore[$filled - 1]) {
-         |    int $j = java.lang.Math.min($filled, $take - 1);
-         |    while ($j > 0 && $s < $bestScore[$j - 1]) {
-         |      $bestScore[$j] = $bestScore[$j - 1]; $bestId[$j] = $bestId[$j - 1]; $j--;
-         |    }
-         |    $bestScore[$j] = $s; $bestId[$j] = $c;
-         |    if ($filled < $take) $filled++;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-         |  java.util.Arrays.copyOf($bestId, $filled));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Public wrappers (importable without touching Spark-internal packages). */
 object VectorFunctions {
 
-  /** Codegen'd dot product; see [[DotProduct]]. */
+  /** Native dot product; see [[DotProduct]]. */
   def dotNative(a: Column, b: Column): Column =
     ExpressionUtils.column(
       DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  def normNative(a: Column): Column = sqrt(dotNative(a, a))
 
   /** All LSH table sign-buckets for a vector; see [[LshTableBuckets]]. */
   def lshTableBuckets(v: Column, planes: Seq[Seq[Double]], bitsPerTable: Int): Column =

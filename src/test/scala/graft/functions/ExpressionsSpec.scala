@@ -39,11 +39,24 @@ class ExpressionsSpec extends SparkSpec {
     assert(got.toSeq == ref.toSeq && got.toSeq == Seq(2L, 0L, 0L, 2L))
   }
 
-  test("expressions survive interpreted mode (codegen off) with same values") {
+  /** Runs `body` with whole-stage codegen and generated projections off,
+    * so every expression evaluates through `nullSafeEval`. */
+  private def interpreted[T](body: => T): T = {
     val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    try body
+    finally {
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
+        case None => spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
+  test("expressions survive interpreted mode (codegen off) with same values") {
+    interpreted {
       val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
       assert(df.select(VectorFunctions.dotNative($"a", $"b")).head().getDouble(0) == 32.0)
       val s = Seq((Seq("x", "y"), Seq("y", "z"))).toDF("a", "b")
@@ -54,13 +67,89 @@ class ExpressionsSpec extends SparkSpec {
       val wm = Seq(Tuple1(Seq(9L, 3L, 7L, 5L))).toDF("hs")
         .select(ArrayFunctions.winnowMins($"hs", 2)).as[Seq[Long]].head()
       assert(wm.toSet == Set(3L, 5L))
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
-        case None => spark.conf.unset("spark.sql.codegen.wholeStage")
-      }
     }
+
+    // Every scalar native expression over an RDD-backed input: a local
+    // Seq(...).toDF() would be folded into a LocalRelation by the
+    // optimizer and never reach generated code.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = new StructType()
+      .add("d1", ArrayType(DoubleType)).add("d2", ArrayType(DoubleType))
+      .add("s1", ArrayType(StringType)).add("s2", ArrayType(StringType))
+      .add("h1", ArrayType(LongType)).add("h2", ArrayType(LongType))
+      .add("m", LongType).add("t", StringType).add("host", StringType)
+    val rows = Seq(
+      Row(Seq(1.5, -2.0, 3.25), Seq(0.5, 4.0, -1.0), Seq("a", "b", "c"), Seq("b", "c", "d"),
+        Seq(9L, 3L, 7L, 5L), Seq(1L, 3L, 8L), 2L,
+        "Cafe\u0301 x x x\n\nab ab\tab 4111 1111 1111 1111", "www.example.co.uk"),
+      // null arrays and strings
+      Row(null, Seq(1.0), null, Seq("a"), null, Seq(2L), null, null, null),
+      // null elements
+      Row(Seq(1.0, null, 2.0), Seq(3.0, 4.0, null), Seq("a", null, "c"), Seq(null, "c"),
+        Seq(1L, null, 2L), Seq(4L, null, 2L), 0L, "", "com"),
+      // empty arrays
+      Row(Seq(), Seq(), Seq(), Seq(), Seq(), Seq(), 5L, "  ", ""),
+      // ragged; the bound of 3 is out of reach after two steps, so the walk
+      // exits at 0 although "x" is shared; no equal position (-1); d1 sits
+      // at the same distance from centroids 0 and 1
+      Row(Seq(0.0, 1.0), Seq(3.0, 4.0, 99.0), Seq("a", "b", "c", "x"), Seq("x", "y", "z"),
+        Seq(5L, 6L, 7L), Seq(1L, 2L), 3L, "abc abc abc abc abc", "a.b.github.io"))
+    val input = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val planes = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 1.0), Seq(-1.0, 1.0))
+    val centers = Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0), Seq(0.0, 3.0))
+    val cols = Seq(
+      VectorFunctions.dotNative($"d1", $"d2"),
+      VectorFunctions.lshTableBuckets($"d1", planes, 2),
+      VectorFunctions.nearestCentroids($"d1", centers, 2),
+      ArrayFunctions.sortedIntersectSize($"s1", $"s2"),
+      ArrayFunctions.sortedIntersectSizeBounded($"s1", $"s2", $"m"),
+      ArrayFunctions.simHash64($"h1"),
+      ArrayFunctions.firstEqualIndex($"h1", $"h2"),
+      ArrayFunctions.splitWhitespace($"t"),
+      ArrayFunctions.minHashBandBuckets($"s1", 8, 4),
+      ArrayFunctions.winnowMins($"h1", 2),
+      ArrayFunctions.nfcNormalize($"t"),
+      ArrayFunctions.registeredDomain($"host"),
+      ArrayFunctions.luhnValid($"t"),
+      ArrayFunctions.charEntropy($"t"),
+      ArrayFunctions.gopherRepetitionStats($"t", lower($"t")))
+    def run(): (String, Seq[Row]) = {
+      val q = input.select(cols: _*)
+      (q.queryExecution.executedPlan.toString, q.collect().toSeq)
+    }
+    val (genPlan, gen) = run()
+    val (evalPlan, eval) = interpreted(run())
+    assert(genPlan.contains("*(1) Project"), genPlan)
+    assert(!evalPlan.contains("*("), evalPlan)
+    assert(gen == eval, gen.zip(eval).mkString("\n"))
+
+    assert(gen(1).toSeq.forall(_ == null))
+    assert(gen(0).getDouble(0) == 1.5 * 0.5 + (-2.0) * 4.0 + 3.25 * (-1.0))
+    assert(gen(2).getDouble(0) == 3.0 && gen(4).getDouble(0) == 4.0)
+    assert(gen(2).getLong(3) == 1L && gen(3).getLong(3) == 0L)
+    assert(gen(4).getLong(3) == 1L && gen(4).getLong(4) == 0L) // early exit
+    assert(gen(0).getLong(4) == 2L && gen(2).getLong(4) == 1L)
+    assert(gen(0).getInt(6) == 1 && gen(2).getInt(6) == 2 && gen(4).getInt(6) == -1)
+    assert(gen(3).getInt(6) == -1 && gen(3).getLong(5) == 0L)
+    assert(gen(4).getSeq[Int](2) == Seq(0, 1)) // tie -> lower centroid id first
+    assert(gen(4).getSeq[Long](1) == Seq(2L, 3L)) // bits [x>0, y>0], [x+y>0, y-x>0]
+    assert(gen(0).getSeq[Long](9).toSet == Set(3L, 5L))
+  }
+
+  test("lshTableBuckets requires 1 <= bitsPerTable <= 64") {
+    val planes = Seq.fill(65)(Seq(1.0))
+    for (bits <- Seq(65, 0)) {
+      val err = intercept[IllegalArgumentException] {
+        VectorFunctions.lshTableBuckets($"v", planes, bits)
+      }
+      assert(err.getMessage.contains("bitsPerTable"), err.getMessage)
+    }
+    // at 64 bits, the last plane sets bit 63 (the sign bit), not bit 0
+    val planes64 = Seq.fill(63)(Seq(-1.0)) :+ Seq(1.0)
+    val b = spark.range(1).select(array(lit(1.0)).as("v"))
+      .select(VectorFunctions.lshTableBuckets($"v", planes64, 64)).head().getSeq[Long](0)
+    assert(b == Seq(Long.MinValue))
   }
 
   test("DotProductRewrite turns the HOF idiom into the native expression") {
@@ -175,20 +264,10 @@ class ExpressionsSpec extends SparkSpec {
       .select(ArrayFunctions.luhnValid($"c")).collect()
     assert(n(0).isNullAt(0))
     // interpreted mode agrees
-    val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val got2 = cases.toDF("c")
-        .select(ArrayFunctions.luhnValid($"c")).as[Boolean].collect().toSeq
-      assert(got2 == got)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
-        case None => spark.conf.unset("spark.sql.codegen.wholeStage")
-      }
+    val got2 = interpreted {
+      cases.toDF("c").select(ArrayFunctions.luhnValid($"c")).as[Boolean].collect().toSeq
     }
+    assert(got2 == got)
     // SQL registration
     GraftExtensions.register(spark)
     assert(spark.sql("SELECT graft_luhn_valid('4111 1111 1111 1111')")
