@@ -6,21 +6,36 @@ import org.apache.spark.sql.DataFrame
 object Par {
 
   /** Repartition UP to the session's default parallelism when the input
-    * has fewer partitions.
+    * has fewer partitions, behind a barrier the optimizer cannot see
+    * through.
     *
     * A small parquet table arrives as one split, and every narrow stage
     * downstream of it — tokenize folds, MinHash signatures, the stream
     * side of a broadcast join — then runs on a single core no matter how
     * many the session has; measured as the dominant cost of the dedup and
     * similarity queries at sf0.1 (one 2 s single-threaded tokenize ahead
-    * of a 32-core join). At cluster scale inputs already carry more
-    * partitions than defaultParallelism, so this is a structural no-op —
-    * it never repartitions DOWN and never changes row contents, only
-    * split count.
+    * of a 32-core join).
+    *
+    * Barrier contract: when `widen` repartitions, everything written
+    * above it stays above its exchange. A plain `df.repartition(n)` does
+    * not hold that: Spark pushes a filter above it down onto the
+    * one-split input, so a filtering caller (the RefinedWeb gates) ran
+    * its per-row work on one task, and a projected column it referenced
+    * was computed on both sides of the exchange. The
+    * [[org.apache.spark.sql.graft.Widened]] node plans the same
+    * round-robin exchange but no rule moves a filter, semi join or
+    * projection below it.
+    *
+    * At cluster scale inputs already carry more partitions than
+    * defaultParallelism, so this returns `df` itself: no node, full
+    * predicate pushdown. It never repartitions DOWN and never changes
+    * row contents, only split count.
     */
   def widen(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (inputPartitions(df) < target) df.repartition(target) else df
+    if (inputPartitions(df) < target)
+      org.apache.spark.sql.graft.Widened(df, target)
+    else df
   }
 
   /** Partition count of `df`'s execution, memoized per (session,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** [EXT] The release-compliance trio as ONE sweep
@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * Shape: [[flags]] annotates each document with the three leg verdicts
   * in a single text-bearing scan — the takedown and blocklist marks are
-  * broadcast LEFT joins (lists deduplicated first: a mark join, unlike
-  * the anti join, would duplicate rows on duplicate keys), the robots
-  * verdict joins the host-keyed election computed over an (id, url)
-  * projection (column-pruned — text never enters the robots path).
-  * [[sweep]] filters the conjunction; [[funnel]] is ONE aggregate over
+  * `IN (list)` tests that plan as broadcast existence joins (one
+  * boolean per document, so duplicate list keys need no dedup
+  * exchange), the robots verdict joins the host-keyed election computed
+  * over an (id, url) projection (column-pruned — text never enters the
+  * robots path).
+  * [[sweep]] keeps the conjunction (the list legs as broadcast anti
+  * joins); [[funnel]] is ONE aggregate over
   * the flags frame (the `refinedweb_funnel` cumulative-flag discipline —
   * never a count per stage).
   */
@@ -32,35 +34,45 @@ object Compliance {
             urlCol: String = "url", textCol: String = "text",
             takedownHashes: DataFrame, blockedDomains: DataFrame,
             robotsRules: DataFrame): DataFrame = {
-    val td = takedownHashes
-      .select(col(takedownHashes.columns.head).as("__h")).distinct()
-      .withColumn("__td", lit(true))
-    val bl = blockedDomains
-      .select(col(blockedDomains.columns.head).as("__dom")).distinct()
-      .withColumn("__bl", lit(true))
-    val dec = graft.ingest.Robots
-      .decisions(docs.select(col(idCol), col(urlCol)), urlCol, robotsRules, idCol)
-      .select(col(idCol), col("allowed").as("f_robots"))
+    // A null key or a null list entry marks nothing, as a left mark join
+    // would. The coalesce keeps that if a filter above pushes the test
+    // down: a bare `NOT IN` there plans as a null-aware anti join, which
+    // drops every row once the list holds a null.
+    def listed(key: Column, keys: DataFrame) =
+      coalesce(key.isin(broadcast(keys.select(col(keys.columns.head)))), lit(false))
     docs
-      .withColumn("__h", md5(col(textCol)))
-      .join(broadcast(td), Seq("__h"), "left")
-      .withColumn("__dom", graft.ingest.Urls.registeredDomain(col(urlCol)))
-      .join(broadcast(bl), Seq("__dom"), "left")
-      .join(dec, Seq(idCol))
-      .withColumn("f_takedown", col("__td").isNull)
-      .withColumn("f_blocklist", col("__bl").isNull)
-      .drop("__h", "__td", "__dom", "__bl")
+      .withColumn("f_takedown", !listed(md5(col(textCol)), takedownHashes))
+      .withColumn("f_blocklist", !listed(
+        graft.ingest.Urls.registeredDomain(col(urlCol)), blockedDomains))
+      .join(robots(docs, idCol, urlCol, robotsRules), Seq(idCol))
   }
 
-  /** Documents surviving all three legs. */
+  /** Documents surviving all three legs: [[flags]]' conjunction, with the
+    * two list legs as broadcast anti joins. A filter over the flags
+    * frame would let the optimizer copy the list tests into the robots
+    * branch wherever it can derive the url from the join key, and then
+    * plan that join as a sort-merge join. */
   def sweep(docs: DataFrame, idCol: String = "doc_id",
             urlCol: String = "url", textCol: String = "text",
             takedownHashes: DataFrame, blockedDomains: DataFrame,
-            robotsRules: DataFrame): DataFrame =
-    flags(docs, idCol, urlCol, textCol, takedownHashes, blockedDomains,
-        robotsRules)
-      .filter(col("f_takedown") && col("f_blocklist") && col("f_robots"))
-      .drop("f_takedown", "f_blocklist", "f_robots")
+            robotsRules: DataFrame): DataFrame = {
+    def unlisted(df: DataFrame, key: Column, keys: DataFrame) =
+      df.join(broadcast(keys.select(col(keys.columns.head).as("__k"))),
+        key === col("__k"), "left_anti")
+    val kept = unlisted(
+      unlisted(docs, md5(col(textCol)), takedownHashes),
+      graft.ingest.Urls.registeredDomain(col(urlCol)), blockedDomains)
+    kept.join(robots(docs, idCol, urlCol, robotsRules), Seq(idCol))
+      .filter(col("f_robots")).drop("f_robots")
+  }
+
+  /** The robots leg, (id, f_robots), over an (id, url) projection:
+    * column-pruned, text never enters it. */
+  private def robots(docs: DataFrame, idCol: String, urlCol: String,
+                     robotsRules: DataFrame): DataFrame =
+    graft.ingest.Robots
+      .decisions(docs.select(col(idCol), col(urlCol)), urlCol, robotsRules, idCol)
+      .select(col(idCol), col("allowed").as("f_robots"))
 
   /** Attrition per leg, cumulatively in sweep order (takedowns →
     * blocklist → robots) — ONE aggregate over the flags frame. */

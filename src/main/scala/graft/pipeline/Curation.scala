@@ -771,8 +771,8 @@ object Curation {
       .sortWithinPartitions(col(orderCol))
     // Pinned (r17, guide §1.2): the frame feeds the per-partition totals
     // ACTION below and the output pass — unpinned, the whole upstream
-    // chain (for releaseShards: the corpus scan + md5 + shuffle-rank
-    // window; for the packing queries: the tokenizer encode) ran once
+    // chain (for releaseShards: the corpus scan, the order hash and the
+    // token count; for the packing queries: the tokenizer encode) ran once
     // per consumer, plus the range partitioner's sampling pass. The
     // frame is narrow (an order column + n_tokens + pass-through
     // columns), so the checkpoint write is cheap next to the re-run;
@@ -1183,18 +1183,19 @@ object Curation {
     * window. Output is the per-shard MANIFEST a release publishes:
     * doc/token counts and an order-independent content fingerprint
     * (bit_xor of per-doc md5-prefix longs) any engine can re-derive to
-    * diff a re-built shard against the published one. One shuffle-order
-    * exchange + the prefix sum's range partition + one shard-keyed
-    * aggregate. */
+    * diff a re-built shard against the published one.
+    *
+    * The pack orders directly on (md5(seed ‖ ':' ‖ text), id): the
+    * [[shuffleCorpus]] shard is prefix-monotone in that hash, so this is
+    * exactly its shuffle order, without its global-rank pass. Shape: the
+    * prefix sum's range partition + one shard-keyed aggregate. */
   def releaseShards(docs: DataFrame, idCol: String, textCol: String,
-                    budget: Long, seed: String = "rel42",
-                    nShards: Int = 64): DataFrame = {
+                    budget: Long, seed: String = "rel42"): DataFrame = {
     val nTok = size(graft.text.TextAnalysis.tokens(lower(col(textCol)))).cast("long")
     val fp = conv(substring(md5(col(textCol)), 1, 15), 16, 10).cast("long")
-    val ordered = shuffleCorpus(graft.Par.widen(docs), textCol, seed, nShards,
-        tieCol = idCol)
-      .select(col("shuffle_pos"), nTok.as("n_tokens"), fp.as("__fp"))
-    packByOrder(ordered, "shuffle_pos", budget)
+    val order = struct(md5(concat_ws(":", lit(seed), col(textCol))), col(idCol))
+    val ordered = docs.select(order.as("__o"), nTok.as("n_tokens"), fp.as("__fp"))
+    packByOrder(ordered, "__o", budget)
       .groupBy(col("chunk_id").as("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("sum_tokens"),
@@ -1666,27 +1667,28 @@ object Curation {
     * whose n-gram overlap with an evaluation/benchmark corpus reaches a
     * threshold — the standard guard against test-set leakage into
     * training data. Benchmark suites are small by contract, so their
-    * distinct shingle set BROADCASTS; per doc, the overlap count is one
-    * semi-structured join + a groupBy on doc id (one shuffle keyed by the
-    * id, not by the shingle — the corpus-wide shingle stream never
-    * re-keys). Docs with no overlap report 0 via the left join back. */
+    * shingle list BROADCASTS into an `IN (list)` test that plans as an
+    * existence join (one boolean per doc shingle, so duplicate list
+    * entries need no dedup exchange); per doc, the overlap count is one
+    * groupBy on doc id (one shuffle keyed by the id, not by the shingle —
+    * the corpus-wide shingle stream never re-keys). `explode_outer`
+    * keeps one null-shingle row for a null or empty text, so every doc
+    * reaches the groupBy and `docs` is read once; a doc with no shared
+    * shingle counts 0 marks. */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     benchmark: DataFrame, benchTextCol: String,
                     n: Int, overlapThreshold: Long): DataFrame = {
     import graft.text.TextAnalysis.shingles
     val benchSh = benchmark
       .select(explode(array_distinct(shingles(col(benchTextCol), n))).as("sh"))
-      .distinct()
-    val docSh = graft.Par.widen(docs)
-      .select(col(idCol), explode(array_distinct(shingles(col(textCol), n))).as("sh"))
-    val overlap = docSh.join(broadcast(benchSh), Seq("sh"))
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_overlap"))
-    docs.select(col(idCol))
-      .join(overlap, Seq(idCol), "left")
+    graft.Par.widen(docs)
       .select(col(idCol),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) >= overlapThreshold)
-          .cast("int").as("contaminated"))
+        explode_outer(array_distinct(shingles(col(textCol), n))).as("sh"))
+      .select(col(idCol),
+        coalesce(col("sh").isin(broadcast(benchSh)), lit(false)).as("__m"))
+      .groupBy(col(idCol)).agg(count_if(col("__m")).as("n_overlap"))
+      .select(col(idCol), col("n_overlap"),
+        (col("n_overlap") >= overlapThreshold).cast("int").as("contaminated"))
       .orderBy(col(idCol))
   }
 

@@ -452,8 +452,6 @@ class PlanQualitySpec extends SparkSpec {
       // crawl_frontier left the list in r10: its host rank moved to
       // Par.globalRank's range-partition prefix sum (|hosts| is
       // data-scale on a real web corpus, not config-scale).
-      "release_shards" -> "shard-offset prefix sum over <= nShards aggregate rows (shuffleCorpus order)",
-      "release_run" -> "the releaseShards tail: shard-offset prefix sum over <= nShards aggregate rows",
       "crawl_then_dashboard" -> "recent-5 rank over <= 5 rows after the TakeOrdered limit")
     val offenders = scala.collection.mutable.SortedMap[String, Int]()
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -86,6 +86,32 @@ class ComplianceSpec extends SparkSpec {
     assert(manifest.map(_.getAs[Long]("content_fp")).reduce(_ ^ _) == fp)
   }
 
+  test("null keys on either side mark nothing; the sweep keeps such docs") {
+    val withNull = docs.unionByName(
+      Seq((7L, "https://ok.example.org/n", null: String)).toDF("doc_id", "url", "text"))
+    val nullTd = takedowns.unionByName(Seq(null: String).toDF("h"))
+    val nullBl = blocked.unionByName(Seq(null: String).toDF("domain"))
+    val fl = Compliance.flags(withNull, "doc_id", "url", "text",
+        nullTd, nullBl, rules)
+      .collect().map(r => r.getLong(0) ->
+        (r.getAs[Boolean]("f_takedown"), r.getAs[Boolean]("f_blocklist"))).toMap
+    assert(fl.size == 7)
+    assert(fl(7L) == ((true, true)))   // null text: no hash to match
+    assert(fl(6L) == ((true, true)))   // null domain vs a null list entry
+    assert(fl(2L) == ((false, true)))
+    val kept = Compliance.sweep(withNull, "doc_id", "url", "text",
+        nullTd, nullBl, rules)
+      .select($"doc_id").as[Long].collect().toSet
+    assert(kept == Set(1L, 6L, 7L))
+    // the same conjunction as a filter over flags: pushed down, the list
+    // tests must keep their null semantics
+    val viaFlags = Compliance.flags(withNull, "doc_id", "url", "text",
+        nullTd, nullBl, rules)
+      .filter($"f_takedown" && $"f_blocklist" && $"f_robots")
+      .select($"doc_id").as[Long].collect().toSet
+    assert(viaFlags == kept)
+  }
+
   test("duplicate takedown hashes do not duplicate rows (mark-join dedup)") {
     val dupTd = takedowns.unionByName(takedowns)
     val n = Compliance.flags(docs, "doc_id", "url", "text",

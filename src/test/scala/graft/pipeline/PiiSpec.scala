@@ -63,6 +63,19 @@ class PiiSpec extends SparkSpec {
     assert(out(2L) == ((0L, 0)))
   }
 
+  test("decontaminate: null, empty and unshared texts each report 0, once") {
+    val docs = Seq[(Long, String)](
+      (1L, "the quick brown fox jumps over the lazy dog entirely"),
+      (2L, null),
+      (3L, ""),
+      (4L, "completely different words appear in this one document"),
+      (5L, "two words")).toDF("doc_id", "text")
+    val bench = Seq(Tuple1("the quick brown fox jumps over hills")).toDF("text")
+    val out = Curation.decontaminate(docs, "doc_id", "text", bench, "text", 3, 3L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(out == Seq((1L, 4L, 1), (2L, 0L, 0), (3L, 0L, 0), (4L, 0L, 0), (5L, 0L, 0)))
+  }
+
   test("decontaminateBloom is row-identical to exact decontaminate") {
     // Hand fixture + the real documents table: the Bloom pass must be a
     // pure prefilter (no false negatives; false positives die in the
