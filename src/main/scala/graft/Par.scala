@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 /** Parallelism hygiene for expensive map stages. */
 object Par {
@@ -113,35 +114,48 @@ object Par {
         1L + rows / 50000L),
       rows / 1000000L).toInt
 
-  /** 1-based global rank of `df` ordered by `orderCol` (must be unique),
-    * WITHOUT a single-partition window: range-partition on the order
-    * column so partition order == global order, count rows per
-    * partition (the only driver exchange — ≤ parallelism longs), then
-    * per-partition `row_number` + the broadcast base offset. The
-    * hierarchical-rank discipline of `Curation.shuffleCorpus` /
-    * `packByOrder`, extracted for any caller that needs a total rank at
-    * data scale (e.g. the frontier's host→worker assignment, where
-    * "bounded by |hosts|" is still tens of millions of rows on a real
-    * web corpus). Output: input columns + `rank` (long). */
-  def globalRank(df: DataFrame, orderCol: String,
-                 rankCol: String = "rank"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
+  /** Distributed exclusive prefix sums over a unique total order — the
+    * one place a global position is computed (ranks, tiers, pack
+    * offsets). For each `(name, weight)` the output gains a long column
+    * `name`: the sum of `weight` (null counts as 0) over the rows
+    * strictly BEFORE this one in `order`; rank is `before(lit(1)) + 1`.
+    * The per-weight totals come back beside the frame. `order` must be
+    * unique (tie-break on an id) and `weight` deterministic.
+    *
+    * No single-partition window and no exchange after the range one:
+    *  1. `repartitionByRange` + `sortWithinPartitions`, so partition
+    *     order is the global order;
+    *  2. one pin of that frame, so the totals and the running sum read
+    *     the same range assignment (a re-planned range partitioner may
+    *     sample different bounds);
+    *  3. one job collecting each partition's weight totals (one long per
+    *     partition and weight), scanned on the driver into start offsets;
+    *  4. a narrow per-partition running sum from each partition's start
+    *     ([[org.apache.spark.sql.graft.RunningSum]]).
+    *
+    * Width: `defaultParallelism`, so it grows with the cluster, not the
+    * data. At 100 TB on a few thousand cores that is a few thousand
+    * range partitions of the pinned frame (order key, weights and
+    * pass-through columns, hundreds of MB each; the sort spills), while
+    * the driver holds a few thousand longs per weight. Output rows stay
+    * range-partitioned and sorted within partitions. */
+  def prefixSum(df: DataFrame, order: Seq[Column],
+                weights: (String, Column)*): (DataFrame, Seq[Long]) = {
     val spark = df.sparkSession
-    val nParts = spark.sparkContext.defaultParallelism
-    val base = df.repartitionByRange(nParts, col(orderCol))
-      .sortWithinPartitions(col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-    val counts = base.groupBy(col("__pid")).agg(count(lit(1)).as("__c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxPid = if (counts.isEmpty) -1 else counts.keys.max
-    val starts = new Array[Long](maxPid + 2)
-    var acc = 0L
-    (0 to maxPid).foreach { p => starts(p) = acc; acc += counts.getOrElse(p, 0L) }
-    val startCol = element_at(
-      array(starts.toIndexedSeq.map(lit(_)): _*), col("__pid") + 1)
-    val w = Window.partitionBy(col("__pid")).orderBy(col(orderCol))
-    base.withColumn(rankCol, (startCol + row_number().over(w)).cast("long"))
-      .drop("__pid")
+    import spark.implicits._
+    val ranged = Mat.pin(df
+      .repartitionByRange(spark.sparkContext.defaultParallelism, order: _*)
+      .sortWithinPartitions(order: _*))
+    val ws = weights.map { case (_, w) => coalesce(w.cast("long"), lit(0L)) }
+    val k = ws.size
+    val perPart = ranged.select(ws: _*).mapPartitions { rows =>
+      val t = new Array[Long](k)
+      rows.foreach(r => (0 until k).foreach(i => t(i) += r.getLong(i)))
+      Iterator(t)
+    }.collect()
+    val starts = (0 until k).map(i => perPart.scanLeft(0L)(_ + _(i)))
+    val before = weights.indices.map(i =>
+      org.apache.spark.sql.graft.RunningSum(ws(i), starts(i)).as(weights(i)._1))
+    (ranged.select(col("*") +: before: _*), starts.map(_.last))
   }
 }

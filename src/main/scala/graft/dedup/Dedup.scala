@@ -247,19 +247,6 @@ object Dedup {
       }))
   }
 
-  /** Declarative twin of the native expression's band-bucket fold:
-    * `low60(md5(bd ++ ":" ++ sig[bd·r],…))` per band, decimal renderings —
-    * pinned equal to [[org.apache.spark.sql.graft.MinHashBandBuckets]] by
-    * ExpressionsSpec. */
-  def minHashBandBucketsDeclarative(sig: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    array((0 until bands).map { bd =>
-      val parts = concat_ws(",",
-        (0 until r).map(j => element_at(sig, bd * r + j + 1).cast("string")): _*)
-      conv(substring(md5(concat(lit(s"$bd:"), parts)), 1, 15), 16, 10).cast("long")
-    }: _*)
-  }
-
   /** MinHash/LSH near-dup pairs (`dedup_near_minhash` query — FULL oracle
     * since r8: the md5-prefix hash family replays relationally, so DuckDB
     * rebuilds signatures, band 4-tuples, candidate pairs and the exact

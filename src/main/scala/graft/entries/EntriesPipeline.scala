@@ -172,9 +172,8 @@ private[graft] object EntriesPipeline {
       graft.pipeline.Curation.mixCorpusTemperature(
         Tables.documents(s, dir), "text", "source")
         .select(col("doc_id"), col("source")).orderBy(col("doc_id"))),
-    // Seeded global shuffle: hierarchical rank (shard prefix + per-shard
-    // window + offset join) == global md5 order, pinned by the oracle's
-    // single ROW_NUMBER.
+    // Seeded global shuffle: the Par.prefixSum rank over (md5, doc_id)
+    // == global md5 order, pinned by the oracle's single ROW_NUMBER.
     "corpus_shuffle" -> ((s, dir) =>
       graft.pipeline.Curation.shuffleCorpus(
         Tables.documents(s, dir), "text", "mix42", 64)
@@ -345,7 +344,7 @@ private[graft] object EntriesPipeline {
     "token_spectrum" -> ((s, dir) =>
       TextAnalysis.tokenSpectrum(Tables.documents(s, dir), "text")),
     // Quality-curriculum training order: ascending quality tiers,
-    // seeded shuffle within each tier, hierarchical ranks throughout.
+    // seeded shuffle within each tier, Par.prefixSum ranks throughout.
     "curriculum_order" -> ((s, dir) =>
       graft.pipeline.Curation.curriculumOrder(Tables.documents(s, dir))),
     // Per-doc cross-document duplication exposure: fraction of the doc's
@@ -865,8 +864,8 @@ private[graft] object EntriesPipeline {
         |WHERE ('0x' || substring(md5(d.text), 1, 8))::UBIGINT % 10000 < r.rate_bp
         |ORDER BY d.doc_id""".stripMargin,
     // The oracle states the shuffle's SEMANTIC: one global ROW_NUMBER
-    // over the seeded hash. The engine computes the same rank
-    // hierarchically (shard prefix + per-shard window + offsets).
+    // over the seeded hash. The engine computes the same rank with
+    // Par.prefixSum.
     "corpus_shuffle" ->
       """WITH hs AS (
         |  SELECT doc_id, md5('mix42:' || text) AS h FROM documents)
@@ -1071,8 +1070,8 @@ private[graft] object EntriesPipeline {
     "release_manifest_sketch" ->
       graft.pipeline.Curation.sqlReleaseManifestSketch("documents"),
     // One NTILE + one ROW_NUMBER state the curriculum semantic; the
-    // engine's closed-form tier (== NTILE) and hierarchical (shard,
-    // hash) rank (prefix-monotone => hash order) reproduce it exactly.
+    // engine's closed-form tier (== NTILE) and its (tier, hash, id)
+    // prefix-sum rank reproduce it exactly.
     "curriculum_order" -> {
       val q = s"COALESCE(${TextAnalysis.sqlQuality("text")}, 0.0)"
       s"""WITH q AS (SELECT doc_id, text, $q AS q FROM documents),

@@ -175,9 +175,9 @@ private[graft] object EntriesTokenizer {
       graft.text.LmScore.prunedScores(Tables.documents(s, dir), "doc_id", "text")),
     // CCNet head/middle/tail perplexity terciles: integer rank
     // arithmetic, no float quantile boundary — full oracle. Bound to the
-    // hierarchical-rank form (r8): per-shard row_number + broadcast
-    // offsets + closed-form tercile, no single-partition window; pinned
-    // output-identical to the global-ntile reference in LmScoreSpec.
+    // prefix-sum form: Par.prefixSum rank + closed-form tercile, no
+    // single-partition window; pinned output-identical to the
+    // global-ntile reference in LmScoreSpec.
     "lm_perplexity_buckets" -> ((s, dir) =>
       graft.text.LmScore.perplexityBucketsScalable(Tables.documents(s, dir))),
     // Per-source TOKEN budget (mixture design is stated in tokens, not

@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: [[schedule]] is one host-keyed exchange (the per-host
   * FIFO rank) plus a broadcast join against the ≤|hosts| worker
-  * assignment table, whose host rank is [[graft.Par.globalRank]]'s
-  * range-partition prefix sum — no single-partition window anywhere
-  * (r10: |hosts| is tens of millions on a real web corpus, too many to
-  * sort on one partition). [[recrawl]] is a single host-keyed
-  * aggregate.
+  * assignment table, whose host rank is [[graft.Par.prefixSum]] — no
+  * single-partition window anywhere (|hosts| is tens of millions on a
+  * real web corpus, too many to sort on one partition). [[recrawl]] is
+  * a single host-keyed aggregate.
   */
 object Frontier {
 
@@ -30,33 +29,8 @@ object Frontier {
     * Output: (idCol, host, worker, slot, scheduled_ms) ordered by
     * scheduled time — the order a fetch loop would drain. */
   def schedule(docs: DataFrame, urlCol: String, idCol: String,
-               delayMs: Long = 1000L, nWorkers: Int = 8): DataFrame = {
-    // null/unparseable URLs collapse to the '' host EXPLICITLY (the
-    // RefinedWeb null-domain lesson): a null host would vanish at the
-    // worker equi-join (null never equals null) and sort differently
-    // across engines — '' keeps every row and one deterministic group.
-    val hostd = docs.withColumn("host",
-      coalesce(Urls.host(col(urlCol)), lit("")))
-    // worker table: distinct hosts ranked WITHOUT a single-partition
-    // window (graft.Par.globalRank's range-partition prefix sum — at
-    // web scale |hosts| is tens of millions, too many to sort on one
-    // partition even though it's far smaller than |URLs|). Output is
-    // identical to a global ROW_NUMBER over host, which is what the
-    // oracle states.
-    val workers = graft.Par.globalRank(
-        hostd.select(col("host")).distinct(), "host")
-      .withColumn("worker", ((col("rank") - 1) % nWorkers).cast("long"))
-      .drop("rank")
-    hostd
-      .withColumn("slot",
-        (row_number().over(
-          Window.partitionBy(col("host")).orderBy(col(idCol))) - 1)
-          .cast("long"))
-      .join(broadcast(workers), Seq("host"))
-      .select(col(idCol), col("host"), col("worker"), col("slot"),
-        (col("slot") * delayMs).as("scheduled_ms"))
-      .orderBy(col("scheduled_ms"), col("host"), col(idCol))
-  }
+               delayMs: Long = 1000L, nWorkers: Int = 8): DataFrame =
+    planned(docs, urlCol, idCol, None, delayMs, nWorkers).drop("delay_ms")
 
   /** [[schedule]] with PER-HOST courtesy intervals
     * (`crawl_delay_schedule` query): hosts that declare a robots
@@ -67,22 +41,37 @@ object Frontier {
     * join against the ≤|declaring hosts| delay table. */
   def scheduleWithDelays(docs: DataFrame, urlCol: String, idCol: String,
                          delays: DataFrame, defaultMs: Long = 1000L,
-                         nWorkers: Int = 8): DataFrame = {
+                         nWorkers: Int = 8): DataFrame =
+    planned(docs, urlCol, idCol, Some(delays), defaultMs, nWorkers)
+
+  /** The one schedule body: host, worker, FIFO slot and per-host delay
+    * (`delays`' `crawl_delay_ms` where declared, else `defaultMs`). */
+  private def planned(docs: DataFrame, urlCol: String, idCol: String,
+                      delays: Option[DataFrame], defaultMs: Long,
+                      nWorkers: Int): DataFrame = {
+    // null/unparseable URLs collapse to the '' host EXPLICITLY (the
+    // RefinedWeb null-domain lesson): a null host would vanish at the
+    // worker equi-join (null never equals null) and sort differently
+    // across engines — '' keeps every row and one deterministic group.
     val hostd = docs.withColumn("host",
       coalesce(Urls.host(col(urlCol)), lit("")))
-    val workers = graft.Par.globalRank(
-        hostd.select(col("host")).distinct(), "host")
-      .withColumn("worker", ((col("rank") - 1) % nWorkers).cast("long"))
-      .drop("rank")
-    hostd
+    // worker table: distinct hosts ranked by graft.Par.prefixSum — at
+    // web scale |hosts| is tens of millions, too many to sort on one
+    // partition. Identical to the oracle's global ROW_NUMBER over host.
+    val (ranked, _) = graft.Par.prefixSum(
+      hostd.select(col("host")).distinct(), Seq(col("host")), "__b" -> lit(1L))
+    val workers = ranked.select(col("host"),
+      (col("__b") % nWorkers).cast("long").as("worker"))
+    val slotted = hostd
       .withColumn("slot",
         (row_number().over(
           Window.partitionBy(col("host")).orderBy(col(idCol))) - 1)
           .cast("long"))
       .join(broadcast(workers), Seq("host"))
-      .join(broadcast(delays), Seq("host"), "left")
-      .withColumn("delay_ms",
-        coalesce(col("crawl_delay_ms"), lit(defaultMs)))
+    val delayed = delays.fold(slotted.withColumn("delay_ms", lit(defaultMs)))(d =>
+      slotted.join(broadcast(d), Seq("host"), "left")
+        .withColumn("delay_ms", coalesce(col("crawl_delay_ms"), lit(defaultMs))))
+    delayed
       .select(col(idCol), col("host"), col("worker"), col("slot"),
         col("delay_ms"), (col("slot") * col("delay_ms")).as("scheduled_ms"))
       .orderBy(col("scheduled_ms"), col("host"), col(idCol))

@@ -20,7 +20,7 @@ import graft.text.{LmScore, TextAnalysis}
   *     keeps one target language per corpus (fastText there, the
   *     marker-word argmax here — same shape, engine-reproducible);
   *  3. LM perplexity TIERS over the survivors
-  *     ([[LmScore.perplexityBucketsScalable]] — the hierarchical-rank
+  *     ([[LmScore.perplexityBucketsScalable]] — the prefix-sum rank
   *     form; CCNet's head/middle/tail split by a language-model score,
   *     self-fit bigram model here) — the tail tier (highest perplexity)
   *     is cut, head+middle ship, mirroring CCNet's standard "keep
@@ -35,7 +35,7 @@ import graft.text.{LmScore, TextAnalysis}
   * (ids + 32-hex norms, never text) + doc-keyed rebuild; stage 2 a
   * per-row codegen filter; stage 3 two token-stream aggregates (unigram
   * + bigram counts, map-side combined), a broadcast cost-table join,
-  * and the hierarchical rank — no single-partition window anywhere
+  * and the [[graft.Par.prefixSum]] rank — no single-partition window anywhere
   * (the ntile twin exists only in specs). Nothing quadratic.
   */
 object CcNetPipeline {
@@ -50,7 +50,6 @@ object CcNetPipeline {
     * materializer-invariant (CcNetPipelineSpec pins it). */
   def stages(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
              lang: String = "en", splitRe: String = "\\n{2,}",
-             nShards: Int = 1024,
              crossFitModel: Option[DataFrame] = None,
              materialize: DataFrame => DataFrame = graft.Mat.pin): Stages = {
     // 0. NFC normalization (r10) AHEAD of the paragraph-norm hashing —
@@ -79,9 +78,9 @@ object CcNetPipeline {
     //    Wikipedia), survivors priced under it with OOV backoff.
     val tiers = nfcModel match {
       case Some(m) =>
-        LmScore.perplexityBucketsCrossFit(lg, "doc_id", "text", m, "text", nShards)
+        LmScore.perplexityBucketsCrossFit(lg, "doc_id", "text", m, "text")
       case None =>
-        LmScore.perplexityBucketsScalable(lg, "doc_id", "text", nShards)
+        LmScore.perplexityBucketsScalable(lg, "doc_id", "text")
     }
     Stages(pd, lg, tiers)
   }
@@ -91,17 +90,15 @@ object CcNetPipeline {
     * the langId-gated survivors. Same stages 1-2, same tail cut. */
   def applyCrossFit(docs: DataFrame, modelDocs: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
-                    lang: String = "en", splitRe: String = "\\n{2,}",
-                    nShards: Int = 1024): DataFrame =
-    stages(docs, idCol, textCol, lang, splitRe, nShards, Some(modelDocs)).tiers
+                    lang: String = "en", splitRe: String = "\\n{2,}"): DataFrame =
+    stages(docs, idCol, textCol, lang, splitRe, Some(modelDocs)).tiers
       .filter(col("tier") =!= "tail")
       .orderBy(col("doc_id"))
 
   def apply(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
             lang: String = "en", splitRe: String = "\\n{2,}",
-            nShards: Int = 1024,
             materialize: DataFrame => DataFrame = graft.Mat.pin): DataFrame =
-    stages(docs, idCol, textCol, lang, splitRe, nShards,
+    stages(docs, idCol, textCol, lang, splitRe,
       materialize = materialize).tiers
       .filter(col("tier") =!= "tail")
       .orderBy(col("doc_id"))
@@ -113,9 +110,8 @@ object CcNetPipeline {
     * < 2 tokens produces no bigrams and cannot be tiered), so
     * `tiers_kept` counts the shipped corpus exactly. */
   def funnel(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-             lang: String = "en", splitRe: String = "\\n{2,}",
-             nShards: Int = 1024): DataFrame = {
-    val st = stages(docs, idCol, textCol, lang, splitRe, nShards)
+             lang: String = "en", splitRe: String = "\\n{2,}"): DataFrame = {
+    val st = stages(docs, idCol, textCol, lang, splitRe)
     val spark = docs.sparkSession
     import spark.implicits._
     Seq(

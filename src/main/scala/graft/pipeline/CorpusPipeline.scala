@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   *     including the benchmark docs themselves);
   *  6. deterministic 80% sample ([[Curation.sampleDeterministic]],
   *     content-keyed on the cleaned text);
-  *  7. GPT-style sequence packing ([[Curation.packChunks]], budget 512).
+  *  7. GPT-style sequence packing ([[Curation.packChunksScalable]],
+  *     budget 512).
   *
   * Oracle-checked END TO END: each stage is ANSI-expressible, so one
   * DuckDB WITH-chain replays the whole line and hash-compares the final
@@ -103,6 +104,6 @@ object CorpusPipeline {
       .select(col("doc_id"))
       .join(keepers, Seq("doc_id"))
     val sampled = Curation.sampleDeterministic(decontaminated, "red", sampleBp)
-    Curation.packChunks(sampled, "doc_id", "red", budget)
+    Curation.packChunksScalable(sampled, "doc_id", "red", budget)
   }
 }

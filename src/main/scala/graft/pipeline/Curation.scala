@@ -407,7 +407,7 @@ object Curation {
   /** Sliding-window chunk EXPANSION (`chunk_texts` query): emit the actual
     * chunk rows — `chunkTokens`-wide token windows stepping by
     * `chunkTokens − overlap` — per document, the RAG/pretraining prep step
-    * that [[packChunks]]'s assignment arithmetic feeds. Pure per-row
+    * that [[packByOrder]]'s assignment arithmetic feeds. Pure per-row
     * explode: chunk starts are a `sequence`, texts are `slice` +
     * `concat_ws` over the token array — no shuffle, fan-out ≈
     * n_tokens/step per doc. The final short window is kept (standard
@@ -549,41 +549,25 @@ object Curation {
     * tie-break only fixes duplicate order) and `shard` is
     * floor(h₃₂ · nShards ∕ 2³²) over the hash's first 32 bits.
     *
-    * Because lowercase fixed-width hex compares lexicographically as its
-    * numeric value and `shard` is monotone in the hash PREFIX, ordering
-    * by (shard, h, tie) EQUALS ordering by (h, tie) — so the global rank
-    * is computed hierarchically (the [[packChunks]]/scalable prefix-sum
-    * discipline): one exchange on shard, a per-shard `row_number`, and a
-    * broadcast nShards-row cumulative-offset join. No global single-
-    * partition window, no driver collect; a new seed is a brand-new,
-    * uncorrelated order. The ∕2³² step is a power-of-two double divide —
-    * exact — so both engines compute identical shards. */
+    * The rank is [[graft.Par.prefixSum]] over (hash, tie): no
+    * single-partition window, one long per partition to the driver. A
+    * new seed is a brand-new, uncorrelated order. `shard` is a per-row
+    * label, monotone in the hash prefix (lowercase fixed-width hex
+    * compares as its numeric value), so shards are contiguous runs of
+    * the order; the ∕2³² step is a power-of-two double divide — exact —
+    * so both engines compute identical shards. */
   def shuffleCorpus(df: DataFrame, keyCol: String, seed: String,
                     nShards: Int = 1024,
                     tieCol: String = "doc_id"): DataFrame = {
     val h = md5(concat_ws(":", lit(seed), col(keyCol)))
-    val withH = df.withColumn("__h", h)
-      .withColumn("shard",
+    val (ranked, _) = graft.Par.prefixSum(df.withColumn("__h", h),
+      Seq(col("__h"), col(tieCol)), "shuffle_pos" -> lit(1L))
+    ranked.select(
         floor(conv(substring(col("__h"), 1, 8), 16, 10).cast("long")
-          .cast("double") * nShards / 4294967296.0).cast("int"))
-    val wIn = Window.partitionBy(col("shard"))
-      .orderBy(col("__h"), col(tieCol))
-    val posIn = withH.withColumn("__p", row_number().over(wIn).cast("long"))
-    // Shard sizes from the PRE-window frame (r17): counting posIn rows
-    // re-ran the per-shard sort window a second time just to throw the
-    // positions away — the count per shard is identical either way, and
-    // this branch now reaches the scan through a map-combined aggregate
-    // with no sort exchange (guide §1.2/§2.3).
-    val sizes = withH.groupBy(col("shard")).agg(count(lit(1)).as("__c"))
-    // bounded input: ≤ nShards aggregated rows through this global window
-    val wOff = Window.orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = sizes
-      .withColumn("__off", coalesce(sum(col("__c")).over(wOff), lit(0L)))
-      .select(col("shard"), col("__off"))
-    posIn.join(broadcast(offs), Seq("shard"))
-      .withColumn("shuffle_pos", col("__off") + col("__p"))
-      .drop("__h", "__p", "__off")
+          .cast("double") * nShards / 4294967296.0).cast("int").as("shard"),
+        col("*"))
+      .withColumn("shuffle_pos", col("shuffle_pos") + 1L)
+      .drop("__h")
   }
 
   /** Quality-curriculum training order (`curriculum_order` query):
@@ -595,71 +579,32 @@ object Curation {
     *
     *  - tier: rank by (quality asc, doc_id) → ⌊(rank−1)·tiers∕n⌋+1 —
     *    equal-size tiers, the [[graft.text.LmScore]] closed-form bucket
-    *    (== NTILE);
-    *  - train_pos: global position = cumulative (tier, hash-shard)
-    *    offset + within-shard row number — the [[shuffleCorpus]]
-    *    hierarchical-rank discipline applied within tiers. The hash
-    *    shard is prefix-monotone in the hash, so (shard, hash) order IS
-    *    hash order and one relational ROW_NUMBER over (tier, md5, id)
-    *    states the whole semantic for the oracle.
+    *    (== NTILE), n from the prefix sum's total;
+    *  - train_pos: rank by (tier, md5(seed ‖ ':' ‖ text), doc_id) — one
+    *    relational ROW_NUMBER states it for the oracle.
     *
     * Null quality (empty docs) coalesces to 0.0 — semantically worst,
     * and it pins the Spark/DuckDB null-ordering divergence shut. Both
-    * rank passes are per-shard windows; the only global windows run over
-    * ≤ nShards and ≤ tiers·nShards aggregated rows. */
+    * ranks are [[graft.Par.prefixSum]] passes; no single-partition
+    * window. */
   def curriculumOrder(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", tiers: Int = 3,
-                      seed: String = "cur42", nShards: Int = 256): DataFrame = {
+                      seed: String = "cur42"): DataFrame = {
     require(tiers > 0, "need tiers > 0")
     val base = graft.Par.widen(docs).select(
         col(idCol).cast("long").as("doc_id"),
         coalesce(graft.text.TextAnalysis.qualityScore(col(textCol)), lit(0.0)).as("q"),
         md5(concat_ws(":", lit(seed), col(textCol))).as("__h"))
-      .pinned // feeds both rank passes
-    // Pass 1: quality rank -> tier. Shard by the (bounded, rounded) score
-    // value itself; within-shard row_number; bounded offset window.
-    val sharded = base.withColumn("__shard",
-      least(lit(nShards - 1), floor(col("q") * nShards).cast("int")))
-    val wIn = Window.partitionBy(col("__shard")).orderBy(col("q"), col("doc_id"))
-    val posIn = sharded.withColumn("__p", row_number().over(wIn).cast("long"))
-    // Counts from the PRE-window frame (r17): identical per-shard counts,
-    // no second sort-window evaluation (see [[shuffleCorpus]]).
-    val sizes = sharded.groupBy(col("__shard")).agg(count(lit(1)).as("__c"))
-    // bounded input: ≤ nShards aggregated rows through this global window
-    val wOff = Window.orderBy(col("__shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = sizes
-      .withColumn("__off", coalesce(sum(col("__c")).over(wOff), lit(0L)))
-      .select(col("__shard"), col("__off"))
-    val total = sizes.agg(sum(col("__c")).as("__n"))
-    // Pinned (r17, guide §1.2): pass 2 reads the tier frame for its rank
-    // window AND its shard-size aggregate — unpinned, each consumer
-    // re-ran pass 1's sort window + offset join. Narrow columns only.
-    val tiered = posIn.join(broadcast(offs), Seq("__shard"))
-      .crossJoin(broadcast(total))
-      .withColumn("tier", expr(s"(((__off + __p) - 1) * $tiers) div __n") + 1L)
-      .select(col("doc_id"), col("q"), col("__h"), col("tier"))
-      .pinned
-    // Pass 2: within-tier seeded shuffle -> global train position. The
-    // cumulative offsets run over (tier, hash shard) in order, so the
-    // offset + within-shard position IS the global position.
-    val sh2 = tiered.withColumn("__s2",
-      floor(conv(substring(col("__h"), 1, 8), 16, 10).cast("long")
-        .cast("double") * nShards / 4294967296.0).cast("int"))
-    val w2 = Window.partitionBy(col("tier"), col("__s2"))
-      .orderBy(col("__h"), col("doc_id"))
-    val pos2 = sh2.withColumn("__p2", row_number().over(w2).cast("long"))
-    // Counts from the PRE-window frame — same rationale as pass 1.
-    val sizes2 = sh2.groupBy(col("tier"), col("__s2")).agg(count(lit(1)).as("__c2"))
-    // bounded input: ≤ tiers·nShards aggregated rows through this window
-    val wOff2 = Window.orderBy(col("tier"), col("__s2"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs2 = sizes2
-      .withColumn("__o2", coalesce(sum(col("__c2")).over(wOff2), lit(0L)))
-      .select(col("tier"), col("__s2"), col("__o2"))
-    pos2.join(broadcast(offs2), Seq("tier", "__s2"))
-      .withColumn("train_pos", col("__o2") + col("__p2"))
-      .select(col("doc_id"), col("q").as("quality"), col("tier"), col("train_pos"))
+    val (byQuality, Seq(n)) = graft.Par.prefixSum(base,
+      Seq(col("q"), col("doc_id")), "__b" -> lit(1L))
+    val tiered = byQuality
+      .withColumn("tier", expr(s"(__b * $tiers) div ${math.max(n, 1L)}") + 1L)
+      .drop("__b")
+    val (byTier, _) = graft.Par.prefixSum(tiered,
+      Seq(col("tier"), col("__h"), col("doc_id")), "__b" -> lit(1L))
+    byTier
+      .select(col("doc_id"), col("q").as("quality"), col("tier"),
+        (col("__b") + 1L).as("train_pos"))
       .orderBy(col("train_pos"))
   }
 
@@ -716,93 +661,38 @@ object Curation {
        |ORDER BY stage""".stripMargin
   }
 
-  /** GPT-style sequence packing (`sequence_packing` query): documents are
-    * conceptually concatenated in a fixed order and cut into fixed
-    * token-budget chunks; each document reports the chunk its first token
-    * lands in and how many chunks it spans. Pure window arithmetic — the
-    * running token total per (ordered) corpus — so the whole assignment is
-    * one window pass, no iteration, and any engine reproduces it exactly:
+  /** The pack over ANY total order: `df` must carry `orderCol` (unique,
+    * defines the concatenation order) and `n_tokens`; all other columns
+    * ride through. Documents are conceptually concatenated in that order
+    * and cut into fixed token-budget chunks; each document reports the
+    * chunk its first token lands in and how many chunks it spans:
     *
-    *   offset      = cumulative tokens BEFORE the doc
+    *   offset      = tokens BEFORE the doc ([[graft.Par.prefixSum]])
     *   chunk_id    = floor(offset / budget)
     *   n_chunks    = floor((offset + n_tokens - 1) / budget) − chunk_id + 1
     *
-    * The single-partition window over the global order is the honest
-    * semantic statement; at 100 TB the same arithmetic runs hierarchically
-    * (per-partition sums → broadcast per-partition offsets — the standard
-    * distributed prefix-sum), which [[packChunksScalable]] implements with
-    * identical output. Empty docs (0 tokens) span 0 chunks and sit at the
-    * boundary offset. */
-  def packChunks(docs: DataFrame, idCol: String, textCol: String,
-                 budget: Long): DataFrame = {
-    val nTok = size(graft.text.TextAnalysis.tokens(lower(col(textCol)))).cast("long")
-    // DELIBERATE global window: this is the semantic reference twin only
-    // — queries and pipelines bind to packChunksScalable/packByOrder.
-    val w = Window.orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs.select(col(idCol), nTok.as("n_tokens"))
-      .withColumn("offset", sum(col("n_tokens")).over(w) - col("n_tokens"))
-      .select(col(idCol), col("n_tokens"),
-        floor(col("offset") / budget).as("chunk_id"),
-        when(col("n_tokens") === 0, lit(0L)).otherwise(
-          floor((col("offset") + col("n_tokens") - 1) / budget) -
-            floor(col("offset") / budget) + 1).as("n_chunks"))
-      .orderBy(col(idCol))
+    * Empty docs (0 tokens) span 0 chunks and sit at the boundary offset.
+    * No single-partition window; [[packChunksScalable]] (id order),
+    * [[releaseShards]] (shuffle order) and [[packingBoundaries]] are all
+    * this operator. */
+  def packByOrder(df: DataFrame, orderCol: String, budget: Long,
+                  keepOffset: Boolean = false): DataFrame = {
+    val (before, _) = graft.Par.prefixSum(df, Seq(col(orderCol)),
+      "offset" -> col("n_tokens"))
+    chunkSpan(before, budget)
+      .drop((if (keepOffset) Seq.empty[String] else Seq("offset")): _*)
   }
 
-  /** The distributed-prefix-sum pack over ANY total order: `df` must
-    * carry `orderCol` (unique, defines the concatenation order) and
-    * `n_tokens`; all other columns ride through. Token counts aggregate
-    * per range-partition, the tiny per-partition totals broadcast back
-    * as starting offsets, and the per-row running sum stays inside each
-    * partition — no single-partition window. The form that runs at
-    * 100 TB; [[packChunksScalable]] (id order) and
-    * [[FineWebPipeline]] (shuffle order) are both this operator. */
-  def packByOrder(df: DataFrame, orderCol: String, budget: Long,
-                  parts: Int = 0, keepOffset: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val nParts = if (parts > 0) parts else spark.sparkContext.defaultParallelism
-    // Range-partition by the order column so partition order == global
-    // order, then two passes: (1) per-partition token totals ->
-    // cumulative starting offsets on the driver (|parts| longs); (2)
-    // per-partition running sum + broadcast base offset.
-    val base = df
-      .repartitionByRange(nParts, col(orderCol))
-      .sortWithinPartitions(col(orderCol))
-    // Pinned (r17, guide §1.2): the frame feeds the per-partition totals
-    // ACTION below and the output pass — unpinned, the whole upstream
-    // chain (for releaseShards: the corpus scan, the order hash and the
-    // token count; for the packing queries: the tokenizer encode) ran once
-    // per consumer, plus the range partitioner's sampling pass. The
-    // frame is narrow (an order column + n_tokens + pass-through
-    // columns), so the checkpoint write is cheap next to the re-run;
-    // __pid is frozen by the pin, which is exactly what the offset
-    // arithmetic wants.
-    val perPart = base.withColumn("__pid", spark_partition_id()).pinned
-    val totals = perPart.groupBy(col("__pid"))
-      .agg(sum(col("n_tokens")).as("__tot"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val starts = {
-      val maxPid = if (totals.isEmpty) -1 else totals.keys.max
-      val arr = new Array[Long](maxPid + 2)
-      var acc = 0L
-      (0 to maxPid).foreach { p => arr(p) = acc; acc += totals.getOrElse(p, 0L) }
-      arr
-    }
-    val startCol = element_at(
-      array(starts.toIndexedSeq.map(lit(_)): _*), col("__pid") + 1)
-    val wp = Window.partitionBy(col("__pid")).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perPart
-      .withColumn("offset",
-        startCol + sum(col("n_tokens")).over(wp) - col("n_tokens"))
+  /** `chunk_id` and `n_chunks` from a frame's `offset` and `n_tokens`
+    * (the [[packByOrder]] arithmetic). A null `n_tokens` has a null
+    * offset, as in the oracle's `SUM(n) OVER (…) - n`. */
+  private[pipeline] def chunkSpan(df: DataFrame, budget: Long): DataFrame =
+    df.withColumn("offset", when(col("n_tokens").isNotNull, col("offset")))
       .withColumn("chunk_id", floor(col("offset") / budget))
       .withColumn("n_chunks",
         when(col("n_tokens") === 0, lit(0L)).otherwise(
           floor((col("offset") + col("n_tokens") - 1) / budget) -
             floor(col("offset") / budget) + 1))
-      .drop("__pid" +: (if (keepOffset) Seq.empty[String] else Seq("offset")): _*)
-  }
 
   /** [[packChunksScalable]] with BPE-piece budgets
     * (`sequence_packing_bpe` query): identical prefix-sum assignment,
@@ -811,21 +701,15 @@ object Curation {
     * context is 512 BPE pieces, not 512 whitespace words; whitespace
     * counts under-fill or overflow sequences whenever compression ≠ 1).
     * Same scale shape: broadcast merge ranks, per-partition encode, the
-    * packByOrder two-pass prefix sum — no new shuffle. Rows-only by
+    * [[packByOrder]] prefix sum — no new shuffle. Rows-only by
     * declared design (the merge list is a driver fit, like the whole
     * `bpe_*` family); CurationSpec pins structure-equality with the
     * whitespace twin on a counts-coincident fixture and divergence where
     * compression differs. */
   def packChunksBpe(docs: DataFrame, idCol: String, textCol: String,
-                    merges: Seq[(String, String)], budget: Long,
-                    parts: Int = 0): DataFrame =
-    packByOrder(
-        graft.text.Bpe.pieceCounts(docs, idCol, textCol, merges)
-          .withColumnRenamed(idCol, "__id"),
-        "__id", budget, parts)
-      .select(col("__id").as(idCol), col("n_tokens"),
-        col("chunk_id"), col("n_chunks"))
-      .orderBy(col(idCol))
+                    merges: Seq[(String, String)], budget: Long): DataFrame =
+    packById(graft.text.Bpe.pieceCounts(docs, idCol, textCol, merges),
+      idCol, budget)
 
   /** [[packChunksBpe]] under the unigram-LM tokenizer
     * (`sequence_packing_unigram` query, r11): the same prefix-sum
@@ -834,15 +718,9 @@ object Curation {
     * its pieces, and the two tokenizers' chunk maps genuinely differ
     * (the fertility audits quantify why). */
   def packChunksUnigram(docs: DataFrame, idCol: String, textCol: String,
-                        pieces: Seq[(String, Long)], budget: Long,
-                        parts: Int = 0): DataFrame =
-    packByOrder(
-        graft.text.Unigram.pieceCounts(docs, idCol, textCol, pieces)
-          .withColumnRenamed(idCol, "__id"),
-        "__id", budget, parts)
-      .select(col("__id").as(idCol), col("n_tokens"),
-        col("chunk_id"), col("n_chunks"))
-      .orderBy(col(idCol))
+                        pieces: Seq[(String, Long)], budget: Long): DataFrame =
+    packById(graft.text.Unigram.pieceCounts(docs, idCol, textCol, pieces),
+      idCol, budget)
 
   /** [EXT] Per-chunk document spans (`packing_boundaries` query) — the
     * attention-mask manifest of concat-then-chunk packing: a trainer
@@ -857,10 +735,10 @@ object Curation {
     * min(off + n − c·B, B)); the fan-out is |docs| + boundary
     * crossings, never token-scale. */
   def packingBoundaries(docs: DataFrame, idCol: String, textCol: String,
-                        budget: Long, parts: Int = 0): DataFrame = {
+                        budget: Long): DataFrame = {
     val nTok = size(graft.text.TextAnalysis.tokens(lower(col(textCol)))).cast("long")
     packByOrder(docs.select(col(idCol).as("__id"), nTok.as("n_tokens")),
-        "__id", budget, parts, keepOffset = true)
+        "__id", budget, keepOffset = true)
       .filter(col("n_tokens") > 0) // empty docs occupy no span
       .withColumn("__k", explode(sequence(lit(0L), col("n_chunks") - 1)))
       .withColumn("chunk_id", col("chunk_id") + col("__k"))
@@ -901,17 +779,24 @@ object Curation {
        |FROM e
        |ORDER BY chunk_id, start_in_chunk, $idCol""".stripMargin
 
-  /** [[packChunks]] as a distributed prefix sum via [[packByOrder]].
-    * Output is IDENTICAL to the window form (CurationSpec pins it). */
+  /** GPT-style sequence packing (`sequence_packing` query): whitespace
+    * tokens, concatenated in id order, cut by [[packByOrder]]. Output
+    * (idCol, n_tokens, chunk_id, n_chunks) ordered by id — IDENTICAL to
+    * the single-window `sum … over (order by id)` statement the oracle
+    * replays (CurationSpec pins it). */
   def packChunksScalable(docs: DataFrame, idCol: String, textCol: String,
-                         budget: Long, parts: Int = 0): DataFrame = {
+                         budget: Long): DataFrame = {
     val nTok = size(graft.text.TextAnalysis.tokens(lower(col(textCol)))).cast("long")
-    packByOrder(docs.select(col(idCol).as("__id"), nTok.as("n_tokens")),
-        "__id", budget, parts)
+    packById(docs.select(col(idCol), nTok.as("n_tokens")), idCol, budget)
+  }
+
+  /** [[packByOrder]] in id order over an (idCol, n_tokens) frame:
+    * (idCol, n_tokens, chunk_id, n_chunks) ordered by id. */
+  private def packById(counts: DataFrame, idCol: String, budget: Long): DataFrame =
+    packByOrder(counts.withColumnRenamed(idCol, "__id"), "__id", budget)
       .select(col("__id").as(idCol), col("n_tokens"),
         col("chunk_id"), col("n_chunks"))
       .orderBy(col(idCol))
-  }
 
   /** Packing-efficiency audit (`packing_efficiency` query): ONE summary
     * row a pipeline owner reads when choosing the sequence budget —
@@ -1185,10 +1070,9 @@ object Curation {
     * (bit_xor of per-doc md5-prefix longs) any engine can re-derive to
     * diff a re-built shard against the published one.
     *
-    * The pack orders directly on (md5(seed ‖ ':' ‖ text), id): the
-    * [[shuffleCorpus]] shard is prefix-monotone in that hash, so this is
-    * exactly its shuffle order, without its global-rank pass. Shape: the
-    * prefix sum's range partition + one shard-keyed aggregate. */
+    * The pack orders on (md5(seed ‖ ':' ‖ text), id), exactly
+    * [[shuffleCorpus]]'s order. Shape: the prefix sum's range partition
+    * + one shard-keyed aggregate. */
   def releaseShards(docs: DataFrame, idCol: String, textCol: String,
                     budget: Long, seed: String = "rel42"): DataFrame = {
     val nTok = size(graft.text.TextAnalysis.tokens(lower(col(textCol)))).cast("long")
@@ -1319,7 +1203,7 @@ object Curation {
 
   /** Histogram bin packing WITHOUT cross-document contamination
     * (`sequence_packing_bins` query) — the Krell-et-al. alternative to
-    * concat-then-chunk ([[packChunks]]): every sequence holds only WHOLE
+    * concat-then-chunk ([[packByOrder]]): every sequence holds only WHOLE
     * documents (no attention contamination, no boundary splits), packed
     * to minimize padding via shortest-pack-first histogram packing:
     *

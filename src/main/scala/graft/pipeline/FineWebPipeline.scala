@@ -30,10 +30,10 @@ import graft.text.{GopherRepetition, GopherRules, TextAnalysis}
   *     length-dominated, the average is the resemblance signal. The
   *     floor(sum∕n) is one correctly-rounded IEEE divide + floor, so
   *     both engines compute the identical integer);
-  *  8. deterministic seeded shuffle ([[Curation.shuffleCorpus]] —
-  *     hierarchical rank, no single-partition sort);
-  *  9. GPT-style sequence packing in SHUFFLE order ([[Curation.packChunks]]
-  *     arithmetic over `shuffle_pos`).
+  *  8. deterministic seeded shuffle ([[Curation.shuffleCorpus]]'s
+  *     order, md5(seed ‖ ':' ‖ text) then doc_id);
+  *  9. GPT-style sequence packing in SHUFFLE order ([[Curation.packByOrder]]
+  *     arithmetic).
   *
   * Output: (doc_id, shuffle_pos, n_tokens, chunk_id, n_chunks) ordered by
   * shuffle_pos. Every stage is ANSI-expressible, so ONE DuckDB WITH-chain
@@ -43,11 +43,11 @@ import graft.text.{GopherRepetition, GopherRules, TextAnalysis}
   * Scale shape: stages 1-3 are scan-stage per-row expressions; 4 is the
   * payload-free md5-keyed marking exchange + doc-keyed rebuild; 5 is one
   * hash shuffle on the text; 6 is a broadcast semi-join + doc-keyed agg;
-  * 7 is a broadcast weight-table join + doc-keyed agg; 8 is the
-  * hierarchical shard rank; 9 is the hierarchical prefix-sum pack
-  * ([[Curation.packByOrder]] — no single-partition window anywhere in
-  * the preset). Nothing quadratic, nothing driver-bound beyond the
-  * 256-row DSIR weight table and the per-partition pack offsets.
+  * 7 is a broadcast weight-table join + doc-keyed agg; 8+9 are ONE
+  * [[graft.Par.prefixSum]] giving both the rank and the token offset —
+  * no single-partition window anywhere in the preset. Nothing
+  * quadratic, nothing driver-bound beyond the 256-row DSIR weight table
+  * and the per-partition prefix totals.
   */
 object FineWebPipeline {
 
@@ -364,22 +364,23 @@ object FineWebPipeline {
             benchMod: Int = 10, shingleN: Int = 3, overlapThreshold: Long = 5L,
             targetMod: Int = 3, dsirBuckets: Int = 256,
             minAvgWeightMicro: Long = -400000L,
-            seed: String = "fineweb", nShards: Int = 16,
+            seed: String = "fineweb",
             budget: Long = 64L, benchCap: Long = 5000L): DataFrame = {
     val st = stages(docs, idCol, textCol, minWordsPerLine, minLines,
       gopherTh, repetitionTh, width, stride, minTokens,
       benchMod, shingleN, overlapThreshold, targetMod, dsirBuckets,
       minAvgWeightMicro, benchCap = benchCap)
-    // 8+9. seeded shuffle, then pack in SHUFFLE order — via the
-    // hierarchical prefix sum ([[Curation.packByOrder]]), so even the
-    // pack stage has no single-partition window: the whole preset is
-    // scale-shaped end to end.
-    val shuffled = Curation.shuffleCorpus(st.sampled, "text", seed, nShards)
-    Curation.packByOrder(
-        shuffled.select(col("doc_id"), col("shuffle_pos"), col("n_tokens")),
-        "shuffle_pos", budget)
-      .select(col("doc_id"), col("shuffle_pos"), col("n_tokens"),
-        col("chunk_id"), col("n_chunks"))
+    // 8+9. seeded shuffle and pack in one prefix sum over the shuffle
+    // order (md5(seed:text), doc_id): shuffle_pos is the rank, the
+    // token offset packs the chunks.
+    val (ranked, _) = graft.Par.prefixSum(
+      st.sampled.select(col("doc_id"), col("n_tokens"),
+        md5(concat_ws(":", lit(seed), col("text"))).as("__h")),
+      Seq(col("__h"), col("doc_id")),
+      "shuffle_pos" -> lit(1L), "offset" -> col("n_tokens"))
+    Curation.chunkSpan(ranked, budget)
+      .select(col("doc_id"), (col("shuffle_pos") + 1L).as("shuffle_pos"),
+        col("n_tokens"), col("chunk_id"), col("n_chunks"))
       .orderBy(col("shuffle_pos"))
   }
 

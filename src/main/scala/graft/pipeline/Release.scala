@@ -48,8 +48,8 @@ object Release {
     val keepers = clean
       .withColumn("__k", min(col(idCol)).over(Window.partitionBy(md5(col(textCol)))))
       .filter(col(idCol) === col("__k")).drop("__k")
-    // Pinned: releaseShards reads it once for the range partitioner's
-    // sample and again for the shard pack.
+    // Pinned: the pack's range partitioner reads it once to sample its
+    // bounds and again to shuffle into the prefix sum's pin.
     val capped = graft.Mat.pin(
       Curation.domainCaps(keepers, urlCol, cap, Seq(col(idCol))))
     Curation.releaseShards(capped, idCol, textCol, shardBudget, seed)

@@ -31,16 +31,10 @@ object Similarity {
   def asDouble(v: Column): Column = transform(v, _.cast("double"))
 
   /** Codegen'd native loop ([[org.apache.spark.sql.graft.DotProduct]]);
-    * identical summation order to the HOF form below and DuckDB's
-    * `list_reduce`, so oracle values are unchanged bit-for-bit. */
+    * identical summation order to DuckDB's `list_reduce`, so oracle
+    * values are unchanged bit-for-bit. */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VectorFunctions.dotNative(a, b)
-
-  /** The declarative higher-order-function equivalent — kept as the
-    * cross-check in SimilaritySpec (interpreted; ~40× slower in all-pairs
-    * joins). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -812,14 +806,6 @@ object Similarity {
        |      FROM s)
        |SELECT probe_id, rk, cand_id, cosine FROM r WHERE rk <= $k
        |ORDER BY probe_id, rk""".stripMargin
-
-  /** Sign-bucket id over a slice of the plane family: bit j = [v · h_j > 0].
-    * One long per (vector, table). */
-  def lshBucket(v: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, j) =>
-      val plane = array(p.map(lit(_)): _*)
-      when(dot(v, plane) > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Multi-table LSH-bucketed approximate kNN (`knn_lsh` query).
     *

@@ -74,64 +74,6 @@ object GopherRepetition {
                               maxDup5Frac: Double = 0.15,
                               maxDup10Frac: Double = 0.10)
 
-  private def nonEmptyUnits(t: Column, sep: String): Column =
-    filter(split(t, sep), u => trim(u) =!= "")
-
-  private def charSum(units: Column): Column =
-    aggregate(units, lit(0L), (acc, x) => acc + length(x).cast("long"))
-
-  private def dupFrac(units: Column): Column =
-    round((size(units) - size(array_distinct(units))).cast("double") /
-      nullif(size(units).cast("double"), lit(0.0)), 4)
-
-  private def dupCharFrac(units: Column): Column =
-    round((charSum(units) - charSum(array_distinct(units))).cast("double") /
-      nullif(charSum(units).cast("double"), lit(0.0)), 4)
-
-  /** Non-space chars of an n-gram of the pinned token class: tokens
-    * carry no whitespace bytes and are joined by single spaces. */
-  private def gramChars(g: Column, n: Int): Column =
-    (length(g) - lit(n - 1)).cast("long")
-
-  /** max over n-grams of occurrences × non-space chars, as a fold over
-    * the sorted shingle array (equal grams are adjacent, so the running
-    * run length reaches the full count on the run's last element). */
-  private def topNgramChars(t: Column, n: Int): Column = {
-    val g = sort_array(TextAnalysis.shingles(t, n))
-    aggregate(g,
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"),
-            when(run >= 2L, run * gramChars(x, n)).otherwise(lit(0L)))
-            .as("best"))
-      },
-      acc => acc.getField("best"))
-  }
-
-  /** Σ over n-grams with occurrences > 1 of occurrences × non-space
-    * chars: runs are flushed into the sum when the next gram differs,
-    * and the finish lambda flushes the final run. */
-  private def dupNgramChars(t: Column, n: Int): Column = {
-    val g = sort_array(TextAnalysis.shingles(t, n))
-    def flush(acc: Column): Column =
-      when(acc.getField("run") > 1L,
-        acc.getField("dsum") +
-          acc.getField("run") * gramChars(acc.getField("prev"), n))
-        .otherwise(acc.getField("dsum"))
-    aggregate(g,
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("dsum")),
-      (acc, x) => {
-        val same = x === acc.getField("prev")
-        val run = when(same, acc.getField("run") + 1L).otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          when(same, acc.getField("dsum")).otherwise(flush(acc)).as("dsum"))
-      },
-      flush)
-  }
-
   /** The nine ROUNDED signal expressions over a text column, in output
     * order — computed from the integer statistics of ONE compiled pass
     * ([[org.apache.spark.sql.graft.GopherRepetitionStats]], r16): the
@@ -162,29 +104,6 @@ object GopherRepetition {
       "top_4gram_char_frac" -> gramFrac(f("top4")),
       "dup_5gram_char_frac" -> gramFrac(f("dup5")),
       "dup_10gram_char_frac" -> gramFrac(f("dup10")))
-  }
-
-  /** The former HOF formulation, kept as the parity cross-check twin
-    * (the [[graft.dedup.Dedup.minHashBandBucketsDeclarative]]
-    * discipline) — GopherRepetitionSpec pins it equal to the fused
-    * [[signalCols]] on the edge fixtures. */
-  private[text] def signalColsDeclarative(t: Column): Seq[(String, Column)] = {
-    val lines = nonEmptyUnits(t, "\\n")
-    val paras = nonEmptyUnits(t, "\\n{2,}")
-    val nch = nullif(charSum(TextAnalysis.tokens(lower(t))).cast("double"),
-      lit(0.0))
-    def topFrac(n: Int) = round(topNgramChars(t, n).cast("double") / nch, 4)
-    def dupNFrac(n: Int) = round(dupNgramChars(t, n).cast("double") / nch, 4)
-    Seq(
-      "dup_line_frac" -> dupFrac(lines),
-      "dup_para_frac" -> dupFrac(paras),
-      "dup_line_char_frac" -> dupCharFrac(lines),
-      "dup_para_char_frac" -> dupCharFrac(paras),
-      "top_2gram_char_frac" -> topFrac(2),
-      "top_3gram_char_frac" -> topFrac(3),
-      "top_4gram_char_frac" -> topFrac(4),
-      "dup_5gram_char_frac" -> dupNFrac(5),
-      "dup_10gram_char_frac" -> dupNFrac(10))
   }
 
   private def passOf(sig: String => Column, th: Thresholds): Column = {

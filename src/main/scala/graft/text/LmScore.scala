@@ -250,7 +250,7 @@ object LmScore {
     * This reference form runs a global `ntile` window (single-partition
     * sort — fine only as the semantic statement and in specs);
     * [[perplexityBucketsScalable]] computes the IDENTICAL assignment
-    * hierarchically and is what the `lm_perplexity_buckets` query binds
+    * by prefix sum and is what the `lm_perplexity_buckets` query binds
     * to. LmScoreSpec pins the two output-equal. */
   def perplexityBuckets(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text"): DataFrame = {
@@ -266,75 +266,37 @@ object LmScore {
   }
 
   /** [[perplexityBuckets]] without the single-partition window — the
-    * 100 TB form (`lm_perplexity_buckets` query since r8), built on the
-    * [[graft.pipeline.Curation.shuffleCorpus]] hierarchical-rank
-    * discipline:
+    * 100 TB form (`lm_perplexity_buckets` query since r8): rank by
+    * (cost, doc_id) and the total n from [[graft.Par.prefixSum]], then
+    * the closed-form bucket ⌊(rank−1)·3 ∕ n⌋ + 1, integer `div`. For
+    * k = 3 this is PROVABLY ntile's big-buckets-first split at every n
+    * (n = 3q+1 → sizes q+1,q,q; n = 3q+2 → q+1,q+1,q), so the output is
+    * bit-identical to the reference form (LmScoreSpec pins it) and the
+    * `ntile`-based DuckDB oracle is unchanged.
     *
-    *  1. deterministic MONOTONE shard = linear bin of `avg_cost_micro`
-    *     over its global [min, max] (one cheap broadcast agg; same cost →
-    *     same shard, shard monotone in cost, so ordering by (shard, cost,
-    *     doc_id) equals the global (cost, doc_id) order — NOT a sampled
-    *     range partitioning, whose per-branch re-evaluation could
-    *     disagree between the rank and size branches);
-    *  2. per-shard `row_number` (the only windows are per-shard);
-    *  3. broadcast ≤nShards-row cumulative-offset join → exact global
-    *     rank;
-    *  4. closed-form bucket = ⌊(rank−1)·3 ∕ n⌋ + 1, integer `div` — for
-    *     k = 3 this is PROVABLY ntile's big-buckets-first split at every
-    *     n (n = 3q+1 → sizes q+1,q,q; n = 3q+2 → q+1,q+1,q), so the
-    *     output is bit-identical to the reference form (LmScoreSpec pins
-    *     it) and the `ntile`-based DuckDB oracle is unchanged.
-    *
-    * Skew bound: a shard holds only documents whose integer cost falls in
-    * its bin — worst case is a single massively-repeated cost value, the
-    * same mass a global sort would put on one boundary anyway. */
+    * Skew bound: a single massively-repeated cost value lands in one
+    * range partition — the same mass a global sort would put on one
+    * boundary anyway. */
   def perplexityBucketsScalable(docs: DataFrame, idCol: String = "doc_id",
-                                textCol: String = "text",
-                                nShards: Int = 1024): DataFrame =
-    bucketsFromScores(scores(docs, idCol, textCol), nShards)
+                                textCol: String = "text"): DataFrame =
+    bucketsFromScores(scores(docs, idCol, textCol))
 
   /** [[perplexityBucketsScalable]] under a CROSS-FIT model
     * ([[scoresCrossFit]]): the Wenzek-et-al. shape — tiers of the corpus
     * by perplexity under the TARGET-domain model, OOV priced by backoff.
-    * Same hierarchical rank, same closed-form terciles. */
+    * Same rank, same closed-form terciles. */
   def perplexityBucketsCrossFit(docs: DataFrame, idCol: String, textCol: String,
-                                modelDocs: DataFrame, modelTextCol: String,
-                                nShards: Int = 1024): DataFrame =
+                                modelDocs: DataFrame, modelTextCol: String): DataFrame =
     bucketsFromScores(
-      scoresCrossFit(docs, idCol, textCol, modelDocs, modelTextCol), nShards)
+      scoresCrossFit(docs, idCol, textCol, modelDocs, modelTextCol))
 
-  /** The hierarchical-rank tercile tail over any (doc_id, n_bigrams,
-    * avg_cost_micro) score table — shared by the self-fit and cross-fit
-    * bucket forms. */
-  private def bucketsFromScores(s: DataFrame, nShards: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bounds = s.agg(min(col("avg_cost_micro")).as("__lo"),
-      max(col("avg_cost_micro")).as("__hi"))
-    val sharded = s.crossJoin(broadcast(bounds))
-      .withColumn("__shard",
-        least(lit(nShards - 1).cast("long"),
-          floor((col("avg_cost_micro") - col("__lo")).cast("double") * nShards /
-            (col("__hi") - col("__lo") + 1L).cast("double")).cast("long")))
-      .drop("__lo", "__hi")
-    val wIn = Window.partitionBy(col("__shard"))
-      .orderBy(col("avg_cost_micro"), col("doc_id"))
-    // Pin the per-shard-ranked frame: the shard-size aggregate and the
-    // final rank join both read it — unpinned, each branch re-ran the
-    // whole upstream scores pipeline plus the window (r17, guide §1.2).
-    val posIn = graft.Mat.pin(
-      sharded.withColumn("__p", row_number().over(wIn).cast("long")))
-    val sizes = posIn.groupBy(col("__shard")).agg(count(lit(1)).as("__c"))
-    // bounded input: ≤ nShards aggregated rows through this global window
-    val wOff = Window.orderBy(col("__shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = sizes
-      .withColumn("__off", coalesce(sum(col("__c")).over(wOff), lit(0L)))
-      .select(col("__shard"), col("__off"))
-    val total = sizes.agg(sum(col("__c")).as("__n"))
-    posIn.join(broadcast(offs), Seq("__shard"))
-      .crossJoin(broadcast(total))
-      .withColumn("__rank", col("__off") + col("__p"))
-      .withColumn("bucket", expr("((__rank - 1) * 3) div __n") + 1L)
+  /** The tercile tail over any (doc_id, n_bigrams, avg_cost_micro) score
+    * table — shared by the self-fit and cross-fit bucket forms. */
+  private def bucketsFromScores(s: DataFrame): DataFrame = {
+    val (ranked, Seq(n)) = graft.Par.prefixSum(s,
+      Seq(col("avg_cost_micro"), col("doc_id")), "__b" -> lit(1L))
+    ranked
+      .withColumn("bucket", expr(s"(__b * 3) div ${math.max(n, 1L)}") + 1L)
       .select(col("doc_id"), col("n_bigrams"), col("avg_cost_micro"),
         when(col("bucket") === 1, "head")
           .when(col("bucket") === 2, "middle")

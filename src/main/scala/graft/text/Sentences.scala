@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * and may split a sentence mid-clause; this operator never does. A
   * sentence straddling a budget boundary goes whole to the chunk that
   * contains its FIRST token — the same quantized-assignment discipline
-  * as [[graft.pipeline.Curation.packChunks]], so chunk_id is a pure
+  * as [[graft.pipeline.Curation.packByOrder]], so chunk_id is a pure
   * window expression, not a stateful greedy scan.
   *
   * Sentence contract (RE2-safe — DuckDB has no lookbehind, so this is a

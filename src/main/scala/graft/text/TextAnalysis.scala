@@ -26,10 +26,6 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     org.apache.spark.sql.graft.ArrayFunctions.splitWhitespace(text)
 
-  /** The regex form, kept as the parity cross-check. */
-  def tokensRegex(text: Column): Column =
-    regexp_extract_all(text, lit("\\S+"), lit(0))
-
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
   /** BPE-ish segmentation: letter runs | digit runs | single other symbol.

@@ -431,27 +431,18 @@ class PlanQualitySpec extends SparkSpec {
     // input (aggregate rows / post-limit rows), never document- or
     // event-scale rows. Checkpointed stage interiors are truncated out
     // of the final plan, so their windows are audited by their own
-    // operator specs (e.g. LmScoreSpec pins the hierarchical bucket
-    // form) — this test guards the assembled query surface.
+    // operator specs (e.g. LmScoreSpec pins the prefix-sum bucket form)
+    // — this test guards the assembled query surface.
     val allow: Map[String, String] = Map(
       "source_distribution" -> "pct-of-total over <= |sources| aggregated rows (A6 parity form)",
       "domain_distribution" -> "pct-of-total over <= |domains| aggregate rows",
       "daily_order_deltas" -> "lag over per-day aggregate rows (<= |order dates|)",
       "bm25_topk" -> "rank over <= k rows after the TakeOrdered limit",
       "vocab_encode" -> "vocab id assignment over <= size rows after the TakeOrdered limit",
-      "corpus_shuffle" -> "shard-offset prefix sum over <= nShards aggregate rows",
       "corpus_mix_temperature" -> "temperature weights over <= |sources| aggregate rows",
-      "lm_perplexity_buckets" -> "shard-offset prefix sum over <= nShards aggregate rows",
-      "corpus_pipeline" -> "shard-offset prefix sum over <= nShards aggregate rows",
-      "corpus_pipeline_gated" -> "shard-offset prefix sum over <= nShards aggregate rows",
-      "corpus_pipeline_full" -> "shard-offset prefix sum over <= nShards aggregate rows",
-      "corpus_pipeline_fineweb" -> "shard-offset prefix sum over <= nShards aggregate rows",
-      "corpus_pipeline_ccnet" -> "perplexity-tier shard-offset prefix sum over <= nShards aggregate rows",
-      "corpus_pipeline_ccnet_crossfit" -> "perplexity-tier shard-offset prefix sum over <= nShards aggregate rows",
-      "curriculum_order" -> "tier + shard offset prefix sums over <= nShards and <= tiers*nShards aggregate rows (both hierarchical-rank passes)",
-      // crawl_frontier left the list in r10: its host rank moved to
-      // Par.globalRank's range-partition prefix sum (|hosts| is
-      // data-scale on a real web corpus, not config-scale).
+      // Ranks, tiers and pack offsets (corpus_shuffle, curriculum_order,
+      // the perplexity tiers, crawl_frontier, every corpus pipeline's
+      // pack) are never here: they run on Par.prefixSum.
       "crawl_then_dashboard" -> "recent-5 rank over <= 5 rows after the TakeOrdered limit")
     val offenders = scala.collection.mutable.SortedMap[String, Int]()
     SparkEntry.queries.foreach { case (name, fn) =>

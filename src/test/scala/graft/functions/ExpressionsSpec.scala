@@ -9,6 +9,20 @@ import org.apache.spark.sql.graft.{GraftExtensions, VectorFunctions, ArrayFuncti
 class ExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Declarative twin of the native expression's band-bucket fold:
+    * `low60(md5(bd ++ ":" ++ sig[bd·r],…))` per band, decimal renderings —
+    * the reference [[org.apache.spark.sql.graft.MinHashBandBuckets]] is
+    * pinned equal to. */
+  private def minHashBandBucketsDeclarative(sig: org.apache.spark.sql.Column,
+                                            numHashes: Int, bands: Int) = {
+    val r = numHashes / bands
+    array((0 until bands).map { bd =>
+      val parts = concat_ws(",",
+        (0 until r).map(j => element_at(sig, bd * r + j + 1).cast("string")): _*)
+      conv(substring(md5(concat(lit(s"$bd:"), parts)), 1, 15), 16, 10).cast("long")
+    }: _*)
+  }
+
   test("dotNative equals the HOF fold bit-for-bit") {
     val df = Seq((Array(1.5, -2.0, 3.25), Array(0.5, 4.0, -1.0))).toDF("a", "b")
     val hof = df.select(
@@ -189,7 +203,7 @@ class ExpressionsSpec extends SparkSpec {
     val sigDf = df.withColumn("sig",
       graft.dedup.Dedup.minHashSignature($"toks", numHashes))
     val expected = sigDf.select(
-        graft.dedup.Dedup.minHashBandBucketsDeclarative($"sig", numHashes, bands).as("b"))
+        minHashBandBucketsDeclarative($"sig", numHashes, bands).as("b"))
       .as[Seq[Long]].collect()
     val got = df.select(ArrayFunctions.minHashBandBuckets($"toks", numHashes, bands).as("b"))
       .as[Seq[Long]].collect()

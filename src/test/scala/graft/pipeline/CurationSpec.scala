@@ -1,12 +1,32 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Curation operators: sampling contract (deterministic, nested-rates,
   * duplicate-consistent), quota caps, repetition-signal values. */
 class CurationSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The single-window statement of the pack: cumulative tokens before
+    * each doc over one `Window.orderBy(id)` — the semantic reference the
+    * prefix-sum packs are pinned equal to. */
+  private def packChunks(docs: DataFrame, idCol: String,
+                         textCol: String, budget: Long) = {
+    val nTok = size(graft.text.TextAnalysis.tokens(lower(col(textCol)))).cast("long")
+    val w = Window.orderBy(col(idCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    docs.select(col(idCol), nTok.as("n_tokens"))
+      .withColumn("offset", sum(col("n_tokens")).over(w) - col("n_tokens"))
+      .select(col(idCol), col("n_tokens"),
+        floor(col("offset") / budget).as("chunk_id"),
+        when(col("n_tokens") === 0, lit(0L)).otherwise(
+          floor((col("offset") + col("n_tokens") - 1) / budget) -
+            floor(col("offset") / budget) + 1).as("n_chunks"))
+      .orderBy(col(idCol))
+  }
 
   private def docs = Seq(
     (1L, "alpha beta gamma", "s1"),
@@ -271,7 +291,7 @@ class CurationSpec extends SparkSpec {
       (4L, Seq.fill(500)("t").mkString(" ")), // off 600, ends 1099 -> chunk 1, spans 2
       (5L, Seq.fill(1200)("t").mkString(" ")) // off 1100 -> chunk 2, spans 3
     ).toDF("doc_id", "text")
-    val out = Curation.packChunks(d, "doc_id", "text", 512L).collect()
+    val out = packChunks(d, "doc_id", "text", 512L).collect()
       .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(out == Map(1L -> ((0L, 1L)), 2L -> ((0L, 2L)), 3L -> ((1L, 0L)),
       4L -> ((1L, 2L)), 5L -> ((2L, 3L))))
@@ -293,14 +313,17 @@ class CurationSpec extends SparkSpec {
   }
 
   test("packChunksScalable equals the single-window form") {
-    val d = (1 to 200).map(i =>
-      (i.toLong, Seq.fill(i % 37 + 1)("t").mkString(" "))).toDF("doc_id", "text")
-    val semantic = Curation.packChunks(d, "doc_id", "text", 64L)
+    // a null text first: null count and chunk, later offsets unmoved
+    val d = ((0L, null: String) +: (1 to 200).map(i =>
+      (i.toLong, Seq.fill(i % 37 + 1)("t").mkString(" "))))
+      .toDF("doc_id", "text")
+    val semantic = packChunks(d, "doc_id", "text", 64L)
       .collect().map(_.toSeq).toSeq
     for (parts <- Seq(1, 3, 8)) {
-      val scalable = Curation.packChunksScalable(d, "doc_id", "text", 64L, parts)
+      val scalable = Curation.packChunksScalable(d.repartition(parts),
+          "doc_id", "text", 64L)
         .collect().map(_.toSeq).toSeq
-      assert(scalable == semantic, s"parts=$parts")
+      assert(scalable == semantic, s"input partitions=$parts")
     }
   }
 

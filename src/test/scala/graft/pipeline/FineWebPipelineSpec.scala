@@ -81,7 +81,7 @@ class FineWebPipelineSpec extends SparkSpec {
   }
 
   test("output is invariant to input partitioning") {
-    // Every stage is content-keyed or hierarchically ranked, so the
+    // Every stage is content-keyed or ranked by prefix sum, so the
     // physical layout of the input must not leak into the result — the
     // property that makes the composition reproducible on a cluster.
     val a = FineWebPipeline(fixture, gopherTh = th).collect().toSeq

@@ -1,7 +1,93 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions._
+
+/** The declarative higher-order-function form of the nine repetition
+  * signals — the parity twin the fused
+  * [[org.apache.spark.sql.graft.GopherRepetitionStats]] pass is pinned
+  * equal to on the edge fixtures. */
+private object DeclarativeSignals {
+
+  def nonEmptyUnits(t: Column, sep: String): Column =
+    filter(split(t, sep), u => trim(u) =!= "")
+
+  def charSum(units: Column): Column =
+    aggregate(units, lit(0L), (acc, x) => acc + length(x).cast("long"))
+
+  def dupFrac(units: Column): Column =
+    round((size(units) - size(array_distinct(units))).cast("double") /
+      nullif(size(units).cast("double"), lit(0.0)), 4)
+
+  def dupCharFrac(units: Column): Column =
+    round((charSum(units) - charSum(array_distinct(units))).cast("double") /
+      nullif(charSum(units).cast("double"), lit(0.0)), 4)
+
+  /** Non-space chars of an n-gram of the pinned token class: tokens
+    * carry no whitespace bytes and are joined by single spaces. */
+  def gramChars(g: Column, n: Int): Column =
+    (length(g) - lit(n - 1)).cast("long")
+
+  /** max over n-grams of occurrences × non-space chars, as a fold over
+    * the sorted shingle array (equal grams are adjacent, so the running
+    * run length reaches the full count on the run's last element). */
+  def topNgramChars(t: Column, n: Int): Column = {
+    val g = sort_array(TextAnalysis.shingles(t, n))
+    aggregate(g,
+      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
+      (acc, x) => {
+        val run = when(x === acc.getField("prev"), acc.getField("run") + 1L)
+          .otherwise(lit(1L))
+        struct(x.as("prev"), run.as("run"),
+          greatest(acc.getField("best"),
+            when(run >= 2L, run * gramChars(x, n)).otherwise(lit(0L)))
+            .as("best"))
+      },
+      acc => acc.getField("best"))
+  }
+
+  /** Σ over n-grams with occurrences > 1 of occurrences × non-space
+    * chars: runs are flushed into the sum when the next gram differs,
+    * and the finish lambda flushes the final run. */
+  def dupNgramChars(t: Column, n: Int): Column = {
+    val g = sort_array(TextAnalysis.shingles(t, n))
+    def flush(acc: Column): Column =
+      when(acc.getField("run") > 1L,
+        acc.getField("dsum") +
+          acc.getField("run") * gramChars(acc.getField("prev"), n))
+        .otherwise(acc.getField("dsum"))
+    aggregate(g,
+      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("dsum")),
+      (acc, x) => {
+        val same = x === acc.getField("prev")
+        val run = when(same, acc.getField("run") + 1L).otherwise(lit(1L))
+        struct(x.as("prev"), run.as("run"),
+          when(same, acc.getField("dsum")).otherwise(flush(acc)).as("dsum"))
+      },
+      flush)
+  }
+
+  /** The nine signals as interpreted HOF folds, in output order. */
+  def signalCols(t: Column): Seq[(String, Column)] = {
+    val lines = nonEmptyUnits(t, "\\n")
+    val paras = nonEmptyUnits(t, "\\n{2,}")
+    val nch = nullif(charSum(TextAnalysis.tokens(lower(t))).cast("double"),
+      lit(0.0))
+    def topFrac(n: Int) = round(topNgramChars(t, n).cast("double") / nch, 4)
+    def dupNFrac(n: Int) = round(dupNgramChars(t, n).cast("double") / nch, 4)
+    Seq(
+      "dup_line_frac" -> dupFrac(lines),
+      "dup_para_frac" -> dupFrac(paras),
+      "dup_line_char_frac" -> dupCharFrac(lines),
+      "dup_para_char_frac" -> dupCharFrac(paras),
+      "top_2gram_char_frac" -> topFrac(2),
+      "top_3gram_char_frac" -> topFrac(3),
+      "top_4gram_char_frac" -> topFrac(4),
+      "dup_5gram_char_frac" -> dupNFrac(5),
+      "dup_10gram_char_frac" -> dupNFrac(10))
+  }
+}
 
 /** Pins the Gopher repetition signals: hand-computed values on a tiny
   * doc, the planted fixture's per-family failures (and the one doc
@@ -114,7 +200,7 @@ class GopherRepetitionSpec extends SparkSpec {
     val df = edge.toDF("doc_id", "text")
     // rebuild the declarative signal table inline
     val decl = df.select(col("doc_id") +:
-      GopherRepetition.signalColsDeclarative(col("text"))
+      DeclarativeSignals.signalCols(col("text"))
         .map { case (n, c) => c.as(n) }: _*)
     val a = GopherRepetition.signals(df).drop("pass").orderBy("doc_id").collect()
     val b = decl.orderBy("doc_id").collect()

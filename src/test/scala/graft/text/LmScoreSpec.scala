@@ -64,23 +64,21 @@ class LmScoreSpec extends SparkSpec {
   test("scalable perplexity buckets equal the global-ntile reference, with no global window") {
     // Mixed corpus: dup-cost clusters (shared text -> identical cost,
     // doc_id tie-break) AND distinct costs, n = 11 (= 3*3+2 exercises
-    // the big-buckets-first remainder split); tiny nShards forces real
-    // multi-doc shards so the offset join does actual work.
+    // the big-buckets-first remainder split); every input partitioning
+    // must give the same tiers.
     val docs = ((1 to 4).map(i => (i.toLong, "the quick brown fox jumps high")) ++
       (5 to 7).map(i => (i.toLong, "the quick zxq fox")) ++
       Seq((8L, "qzx zxq the fox"), (9L, "qzx zxq xqz qxz"),
         (10L, "zz yy xx ww"), (11L, "the quick brown fox strolls")))
       .toDF("doc_id", "text")
     val ref = LmScore.perplexityBuckets(docs).collect().map(_.toSeq).toSeq
-    for (nShards <- Seq(1, 4, 1024)) {
-      val got = LmScore.perplexityBucketsScalable(docs, nShards = nShards)
-      assert(got.collect().map(_.toSeq).toSeq == ref, s"nShards=$nShards")
+    for (parts <- Seq(1, 3, 8)) {
+      val got = LmScore.perplexityBucketsScalable(docs.repartition(parts))
+      assert(got.collect().map(_.toSeq).toSeq == ref, s"input partitions=$parts")
     }
-    // The scale point: no partition-less window over DOCUMENT rows. The
-    // one empty-partition-spec WindowExec allowed is the cumulative
-    // offset scan over the <= nShards aggregated size rows — its child
-    // must be an aggregate, never the corpus scan. (AQE's wrapper node
-    // hides the tree from collect(), so plan with AQE off.)
+    // The scale point: no partition-less window at all — the rank is
+    // the range-partitioned prefix sum. (AQE's wrapper node hides the
+    // tree from collect(), so plan with AQE off.)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val exec = LmScore.perplexityBucketsScalable(docs).queryExecution.executedPlan
@@ -88,10 +86,7 @@ class LmScoreSpec extends SparkSpec {
         case w: org.apache.spark.sql.execution.window.WindowExec
           if w.partitionSpec.isEmpty => w
       }
-      assert(globalWindows.size == 1, s"expected 1 bounded global window:\n$exec")
-      assert(globalWindows.head.collectFirst {
-        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
-      }.nonEmpty, "global window input must be the per-shard size aggregate")
+      assert(globalWindows.isEmpty, s"expected no global window:\n$exec")
       assert(!exec.toString.contains("ntile"), "scalable form must not use ntile")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }

@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
 class TokenizeParitySpec extends SparkSpec {
   import spark.implicits._
 
+  /** The regex form the native tokenizer must equal. */
+  private def tokensRegex(text: org.apache.spark.sql.Column) =
+    regexp_extract_all(text, lit("\\S+"), lit(0))
+
   test("native split equals regexp \\S+ on edge strings") {
     val edges = Seq(
       "", " ", "\t\n\f\r", "a", "  a  b\tc\nd\re\ff  ",
@@ -20,7 +24,7 @@ class TokenizeParitySpec extends SparkSpec {
     val df = edges.toDF("text")
       .select(
         TextAnalysis.tokens(col("text")).as("native"),
-        TextAnalysis.tokensRegex(col("text")).as("regex"))
+        tokensRegex(col("text")).as("regex"))
     assert(df.filter(not(col("native") === col("regex"))).count() == 0)
     // NBSP really is token-glue, not a separator
     assert(Seq("a b").toDF("t")
@@ -31,14 +35,14 @@ class TokenizeParitySpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val df = docs.select(
       TextAnalysis.tokens(lower(col("text"))).as("native"),
-      TextAnalysis.tokensRegex(lower(col("text"))).as("regex"))
+      tokensRegex(lower(col("text"))).as("regex"))
     assert(df.filter(not(col("native") === col("regex"))).count() == 0)
   }
 
   test("null text maps to null under both forms") {
     val df = Seq(1).toDF("x")
       .select(TextAnalysis.tokens(lit(null).cast("string")).as("native"),
-        TextAnalysis.tokensRegex(lit(null).cast("string")).as("regex"))
+        tokensRegex(lit(null).cast("string")).as("regex"))
     val r = df.head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
