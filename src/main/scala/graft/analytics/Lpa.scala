@@ -2,10 +2,10 @@ package graft.analytics
 
 import graft.analytics.Iterate.{Graph, prepareGraph}
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable.LongMap
 
 /** [EXT] Synchronous label propagation (`part_communities` query) —
   * community detection at link-graph scale (Raghavan et al. 2007): each
@@ -22,14 +22,16 @@ import org.apache.spark.sql.functions._
   * update together, labels start as node ids, a fixed round count.
   * Every step is integer/rank arithmetic — bit-identical in DuckDB.
   *
-  * Scale shape: the [[PageRank]] discipline on [[Iterate]] — one lazy
-  * lineage evaluated once (a DataFrame-loop draft paid Catalyst
-  * replanning + eager checkpoints per round). Per round, ONE vote
-  * shuffle: `aggregateByKey` combines (node, label) votes map-side into
-  * per-node label→count maps and the election runs in the finalizer;
-  * then a NARROW leftOuterJoin back to the co-partitioned node vector
-  * (no-in-edge nodes keep their label). No per-round action, no global
-  * anything, nothing quadratic.
+  * Scale shape: the [[PageRank]] discipline on [[Iterate]]. A graph
+  * whose edges fit `spark.sql.autoBroadcastJoinThreshold` is collected
+  * once and every vote runs over driver arrays (no per-round job).
+  * Above it, one lazy lineage evaluated once (a DataFrame-loop draft
+  * paid Catalyst replanning + eager checkpoints per round); per round
+  * ONE vote shuffle: `aggregateByKey` combines (node, label) votes
+  * map-side into per-node label→count maps and the election runs in the
+  * finalizer; then a NARROW leftOuterJoin back to the co-partitioned
+  * node vector (no-in-edge nodes keep their label). No per-round
+  * action, no global anything, nothing quadratic.
   *
   * Skew bound: a node's vote map is bounded by its DISTINCT in-neighbor
   * labels — the map-side combine spreads the build, but one reducer
@@ -41,48 +43,29 @@ import org.apache.spark.sql.functions._
   */
 object Lpa {
 
-  private type Vec = RDD[(Long, Long)]
-
-  /** ONE synchronous vote round over the prepared graph — shared by every
-    * label face, so their bit-identity contracts hold by construction.
-    * ONE shuffle: votes combine map-side into per-node label→count maps,
-    * the election (count desc, label asc — a total order) runs in the
-    * finalizer; the carry-forward left join is narrow (both sides share
-    * `part`). */
-  private def voteRound(adj: RDD[(Long, Array[Long])], part: HashPartitioner)(
-      labels: Vec): Vec = {
-    val elected = adj.join(labels)
-      .flatMap { case (_, (dsts, lab)) => dsts.iterator.map(d => (d, lab)) }
-      .aggregateByKey(scala.collection.mutable.LongMap.empty[Long], part)(
-        (m, lab) => { m.update(lab, m.getOrElse(lab, 0L) + 1L); m },
-        (m1, m2) => {
-          m2.foreach { case (lab, c) =>
-            m1.update(lab, m1.getOrElse(lab, 0L) + c)
-          }
-          m1
-        })
-      .mapValues { m =>
-        var bestLab = Long.MaxValue
-        var bestC = -1L
-        m.foreach { case (lab, c) =>
-          if (c > bestC || (c == bestC && lab < bestLab)) {
-            bestC = c; bestLab = lab
-          }
-        }
-        bestLab
+  /** The election: the most frequent label, ties to the SMALLEST (count
+    * desc, label asc — a total order), over one node's in-label
+    * histogram — shared by both graph layouts. */
+  private def elect(m: LongMap[Long]): Long = {
+    var bestLab = Long.MaxValue
+    var bestC = -1L
+    m.foreach { case (lab, c) =>
+      if (c > bestC || (c == bestC && lab < bestLab)) {
+        bestC = c; bestLab = lab
       }
-    labels.leftOuterJoin(elected)
-      .mapValues { case (old, o) => o.getOrElse(old) }
+    }
+    bestLab
   }
 
-  /** The label loop over one prepared graph: labels start as node ids. */
-  private def labelChain[A](edges: DataFrame, srcCol: String, dstCol: String)(
-      run: (Graph, Iterate[Vec]) => A): A =
-    prepareGraph(edges, srcCol, dstCol) { g =>
-      run(g, Iterate[Vec](_.vec(g.nodes.mapPartitions(
-          _.map { case (v, _) => (v, v) }, preservesPartitioning = true)))((l, k) =>
-        k.vec(voteRound(g.adj, g.part)(l))))
-    }
+  private val nodeRow: (Long, Long) => Product = (n, x) => (n, x)
+
+  /** The label loop over one prepared graph: labels start as node ids;
+    * every round is ONE synchronous vote ([[Graph.vote]] with [[elect]])
+    * — shared by every label face, so their bit-identity contracts hold
+    * by construction. */
+  private def labelsOf(g: Graph): Iterate[g.Vec[Long]] =
+    Iterate[g.Vec[Long]](k => g.vec(k)(g.init(v => v)))((l, k) =>
+      g.vec(k)(g.vote(l)(elect)))
 
   /** (node, community) after `rounds` synchronous rounds, ordered by
     * node; directed (src, dst) edges vote along their direction,
@@ -90,8 +73,9 @@ object Lpa {
     * an empty edge set gives an empty frame. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 5): DataFrame =
-    labelChain(edges, srcCol, dstCol)((g, it) =>
-      it.fixed(rounds)(g.result(_, "node", "community")))
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      labelsOf(g).fixed(rounds)(g.result(_, "node", "community")(nodeRow))
+    }
 
   /** [EXT] [[labelPropagation]] with a convergence-driven early stop:
     * propagate until the round's churn — #{v : label changed} — drops to
@@ -127,18 +111,18 @@ object Lpa {
 
   /** The early-stop loop of both churn faces. The threshold is taken
     * from the prepared graph, so the ppm face counts |V| on the
-    * persisted node set instead of deriving the edges twice. */
+    * prepared node set instead of deriving the edges twice. */
   private def labelUntil(edges: DataFrame, srcCol: String, dstCol: String,
                          thresholdOf: Graph => Long, maxRounds: Int)
       : (DataFrame, Int) =
-    labelChain(edges, srcCol, dstCol) { (g, it) =>
+    prepareGraph(edges, srcCol, dstCol) { g =>
       val maxChurn = thresholdOf(g)
-      it.until(maxRounds)((next, prev) => churn(next, prev) <= maxChurn)(
-        (l, k) => (g.result(l, "node", "community"), k))
+      labelsOf(g).until(maxRounds)((next, prev) => churn(g)(next, prev) <= maxChurn)(
+        (l, k) => (g.result(l, "node", "community")(nodeRow), k))
     }
 
-  private def churn(a: Vec, b: Vec): Long =
-    a.join(b).map { case (_, (x, y)) => if (x != y) 1L else 0L }.fold(0L)(_ + _)
+  private def churn(g: Graph)(a: g.Vec[Long], b: g.Vec[Long]): Long =
+    g.fold(g.zip(a, b))(0L)((s, p) => if (p._1 != p._2) s + 1L else s, _ + _)
 
   /** `part_communities`: LPA over the co-purchase part graph
     * ([[PageRank.copurchaseEdges]] — symmetric, so communities are the
@@ -153,20 +137,18 @@ object Lpa {
     * rows ordered by round. Running LPA at a fixed round count (the
     * cross-engine determinism requirement) is licensed only if the churn
     * curve shows the graph converged — this makes that a hash-checked
-    * number. The whole curve is one job sharing the vote shuffles. */
+    * number. On the distributed layout the whole curve is one job sharing
+    * the vote shuffles. */
   def convergence(edges: DataFrame, srcCol: String, dstCol: String,
                   rounds: Int = 5): DataFrame =
-    labelChain(edges, srcCol, dstCol) { (g, it) =>
-      it.curve(rounds) { (k, next, prev) =>
-        (next.join(prev).map { case (_, (a, b)) => (k, if (a != b) 1L else 0L) },
-          next.map { case (_, lab) => (k, lab) })
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      labelsOf(g).curve(rounds) { (k, next, prev) =>
+        (g.rows(k, g.map(g.zip(next, prev))(p => if (p._1 != p._2) 1L else 0L))(_ + _),
+          g.distinctRows(k, next))
       } { ds =>
         val (changed, labs) = ds.unzip
-        g.result(g.sc.union(changed).reduceByKey(_ + _)
-            .join(g.sc.union(labs).distinct().map { case (k, _) => (k, 1L) }
-              .reduceByKey(_ + _))
-            .map { case (k, (ch, nc)) => (k, ch, nc) },
-          "round", "n_changed", "n_communities")
+        g.table(g.joinRows(g.sumRows(changed)(_ + _), g.countDistinct(labs)),
+          "round", "n_changed", "n_communities") { case (k, (ch, nc)) => (k, ch, nc) }
       }
     }
 

@@ -1,10 +1,7 @@
 package graft.analytics
 
-import graft.Mat.Pinnable
 import graft.analytics.Iterate.{Graph, Keep, prepareGraph}
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,27 +26,43 @@ import org.apache.spark.sql.functions._
   * |V|·iterations units total (≈1e-7 of the mass here), deterministic,
   * and identical in the oracle, which replays the same divisions.
   *
-  * Execution shape: the GraphX-style genuine-iterative RDD exception
-  * (see [[graft.dedup.Dedup.clusterKeepers]] for the rationale — a
-  * DataFrame loop would pay Catalyst replanning per round). Every face
-  * runs on [[Iterate]]: the graph is prepared once (adjacency and node
-  * set hash-partitioned and persisted), so each round's adjacency⋈ranks
-  * join is narrow and the only per-round movement is the reduceByKey of
-  * contributions — one exchange per iteration, the irreducible PageRank
-  * cost. Dangling nodes cannot occur on a symmetrized graph (every node
-  * has out-edges); for general edge lists the mass of dangling nodes
-  * simply leaks, matching the oracle's replay.
-  *
-  * Scale: |E| edges per round through one exchange; partition count
-  * follows the graph size, not the corpus-scan shuffle width.
+  * Execution shape: every face runs on [[Iterate]], written once against
+  * the prepared graph's vector algebra, with two layouts behind it:
+  *  - edges within `spark.sql.autoBroadcastJoinThreshold` (16 bytes an
+  *    edge) are collected ONCE and every round is a loop over driver
+  *    arrays — no per-round job, a local result frame;
+  *  - larger graphs take the GraphX-style RDD loop (a DataFrame loop
+  *    would pay Catalyst replanning per round): adjacency and node set
+  *    hash-partitioned and persisted, so each round's adjacency⋈ranks
+  *    join is narrow and the only per-round movement is the reduceByKey
+  *    of contributions — one exchange per iteration, the irreducible
+  *    PageRank cost; partition count follows the graph size.
+  * Both layouts call the same arithmetic ([[share]], [[teleport]],
+  * [[normalize]]), so they agree bit for bit. Dangling nodes cannot occur
+  * on a symmetrized graph (every node has out-edges); for general edge
+  * lists the mass of dangling nodes simply leaks, matching the oracle's
+  * replay.
   */
 object PageRank {
 
   val Scale: Long = 1000000000000L
 
-  private type Vec = RDD[(Long, Long)]
-  private type Pair = RDD[(Long, (Long, Long))]
-  private type Tele = RDD[(Long, (Long, Long))]
+  /** A source's damped rank share per out-edge. */
+  private def share(r: Long, dampingPct: Int, outDeg: Int): Long =
+    r * dampingPct / 100L / outDeg
+
+  /** (teleport, initial rank) on each of `n` teleport targets. */
+  private def teleport(dampingPct: Int, n: Long): (Long, Long) =
+    (Scale * (100L - dampingPct) / 100L / n, Scale / n)
+
+  /** HITS normalization: `x`'s share of `total` in `Scale` units, floored
+    * (BigInt: x·Scale can exceed a Long; DuckDB's HUGEINT `//` replays the
+    * floor). */
+  private def normalize(x: Long, total: Long): Long =
+    if (total == 0L || x == 0L) 0L else (BigInt(x) * Scale / total).toLong
+
+  private val nodeRow: (Long, Long) => Product = (n, x) => (n, x)
+  private def plus2(a: (Long, Long), b: (Long, Long)) = (a._1 + b._1, a._2 + b._2)
 
   /** Ranks over the node set of `edges` (directed (src, dst) pairs;
     * duplicates are deduplicated per node while building the adjacency,
@@ -59,8 +72,8 @@ object PageRank {
     * with no nodes. */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iterations: Int = 10, dampingPct: Int = 85): DataFrame =
-    rankChain(edges, srcCol, dstCol, None, dampingPct) { (g, it) =>
-      it.fixed(iterations)(g.result(_, "node", "rank_fp"))
+    rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      ranksOf(g)(None, dampingPct).fixed(iterations)(g.result(_, "node", "rank_fp")(nodeRow))
     }
 
   /** [EXT] [[ranks]] with a convergence-driven early stop: iterate until
@@ -74,17 +87,25 @@ object PageRank {
     * saves 30-40% of the |E|-shuffle rounds. */
   def ranksUntil(edges: DataFrame, srcCol: String, dstCol: String,
                  tolFp: Long, maxIterations: Int = 50,
-                 dampingPct: Int = 85): (DataFrame, Int) =
-    rankChain(edges, srcCol, dstCol, None, dampingPct)(rankUntil(tolFp, maxIterations))
+                 dampingPct: Int = 85): (DataFrame, Int) = {
+    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
+    rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      rankUntil(g)(ranksOf(g)(None, dampingPct), tolFp, maxIterations)
+    }
+  }
 
   /** [[ranksUntil]] for the TrustRank teleport: BIT-identical to
     * `seededRanks(iterations = stop)`. */
   def seededRanksUntil(edges: DataFrame, srcCol: String, dstCol: String,
                        seeds: DataFrame, seedCol: String,
                        tolFp: Long, maxIterations: Int = 50,
-                       dampingPct: Int = 85): (DataFrame, Int) =
-    rankChain(edges, srcCol, dstCol, Some(seeds.select(col(seedCol).cast("long"))),
-      dampingPct)(rankUntil(tolFp, maxIterations))
+                       dampingPct: Int = 85): (DataFrame, Int) = {
+    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
+    rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      rankUntil(g)(ranksOf(g)(Some(seeds.select(col(seedCol).cast("long"))), dampingPct),
+        tolFp, maxIterations)
+    }
+  }
 
   /** [EXT] TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004): PageRank
     * with teleport restricted to a trusted SEED set — trust flows out of
@@ -98,9 +119,9 @@ object PageRank {
   def seededRanks(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
                   iterations: Int = 10, dampingPct: Int = 85): DataFrame =
-    rankChain(edges, srcCol, dstCol, Some(seeds.select(col(seedCol).cast("long"))),
-        dampingPct) { (g, it) =>
-      it.fixed(iterations)(g.result(_, "node", "rank_fp"))
+    rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      ranksOf(g)(Some(seeds.select(col(seedCol).cast("long"))), dampingPct)
+        .fixed(iterations)(g.result(_, "node", "rank_fp")(nodeRow))
     }
 
   /** F130: the per-round convergence curve of [[ranks]]
@@ -110,23 +131,24 @@ object PageRank {
     * max|r_k − r_{k−1}|, n_changed = #{v : r_k(v) ≠ r_{k−1}(v)}), in
     * `Scale` fixed-point units — integer arithmetic end to end, so the
     * curve hash-matches the oracle's unrolled replay. `iterations` rows,
-    * ordered by round; the whole curve is one job sharing the rank
-    * chain's shuffles. */
+    * ordered by round; on the distributed layout the whole curve is one
+    * job sharing the rank chain's shuffles. */
   def convergence(edges: DataFrame, srcCol: String, dstCol: String,
-                  iterations: Int = 10, dampingPct: Int = 85): DataFrame =
-    rankChain(edges, srcCol, dstCol, None, dampingPct) { (g, it) =>
-      it.curve(iterations) { (k, next, prev) =>
-        next.join(prev).map { case (_, (a, b)) =>
+                  iterations: Int = 10, dampingPct: Int = 85): DataFrame = {
+    val plus3 = (a: (Long, Long, Long), b: (Long, Long, Long)) =>
+      (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3)
+    rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      ranksOf(g)(None, dampingPct).curve(iterations) { (k, next, prev) =>
+        g.rows(k, g.map(g.zip(next, prev)) { case (a, b) =>
           val d = math.abs(a - b)
-          (k, (d, d, if (d != 0L) 1L else 0L))
-        }
+          (d, d, if (d != 0L) 1L else 0L)
+        })(plus3)
       } { ds =>
-        g.result(g.sc.union(ds)
-            .reduceByKey((a, b) => (a._1 + b._1, math.max(a._2, b._2), a._3 + b._3))
-            .map { case (k, (s, m, c)) => (k, s, m, c) },
-          "round", "l1_delta_fp", "linf_delta_fp", "n_changed")
+        g.table(g.sumRows(ds)(plus3), "round", "l1_delta_fp", "linf_delta_fp",
+          "n_changed") { case (k, (s, m, c)) => (k, s, m, c) }
       }
     }
+  }
 
   /** [EXT] Spam mass (Gyöngyi et al. 2006, `trust_propagation` query):
     * how much of a node's PageRank is NOT accounted for by trust flowing
@@ -147,8 +169,9 @@ object PageRank {
   def spamMass(edges: DataFrame, srcCol: String, dstCol: String,
                seeds: DataFrame, seedCol: String,
                iterations: Int = 10, dampingPct: Int = 85): DataFrame =
-    pairChain(edges, srcCol, dstCol, seeds, seedCol, dampingPct) { (g, _, _, it) =>
-      it.fixed(iterations)(both => g.frame(flat(both), "node", "pr_fp", "tr_fp").pinned)
+    rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      val (_, _, it) = pairOf(g)(seeds.select(col(seedCol).cast("long")), dampingPct)
+      it.fixed(iterations)(g.frame(_, "node", "pr_fp", "tr_fp")(flat))
     }.withColumn("spam_mass_ppm", spamPpm).orderBy(col("node"))
 
   /** PRODUCTION face of the spam-mass triple: both rank vectors
@@ -165,158 +188,124 @@ object PageRank {
                     tolFp: Long = 1000000L, maxIterations: Int = 50,
                     dampingPct: Int = 85): DataFrame = {
     require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
-    val (both, kPr, kTr) =
-      pairChain(edges, srcCol, dstCol, seeds, seedCol, dampingPct) {
-          (g, telePr, teleTr, it) =>
-        def out(v: Pair, kPr: Int, kTr: Int) =
-          (g.frame(flat(v), "node", "pr_fp", "tr_fp").pinned, kPr, kTr)
-        // Joint rounds while BOTH chains run — one residual action serves
-        // both stop rules ...
-        var done = (false, false)
-        it.until(maxIterations) { (next, prev) =>
-          val (l1p, l1t) = next.join(prev).map { case (_, ((ap, at), (bp, bt))) =>
-            (math.abs(ap - bp), math.abs(at - bt))
-          }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
-          done = (l1p < tolFp, l1t < tolFp)
-          done._1 || done._2
-        } { (v, k) =>
-          if (done._1 == done._2 || k == maxIterations) out(v, k, k)
-          else {
-            // ... then the straggler goes on alone on the single-chain
-            // round with the other vector frozen, which is exactly what
-            // "its own loop ended" means.
-            val prFrozen = done._1
-            rankIterate(g, if (prFrozen) teleTr else telePr, dampingPct,
-                v.mapValues(p => if (prFrozen) p._2 else p._1))
-              .until(maxIterations - k)(l1(_, _) < tolFp) { (s, ks) =>
-                val joined = v.join(s).mapValues { case ((p, t), x) =>
-                  if (prFrozen) (p, x) else (x, t)
-                }
-                if (prFrozen) out(joined, k, k + ks) else out(joined, k + ks, k)
+    val (both, kPr, kTr) = rankGraph(edges, srcCol, dstCol, dampingPct) { g =>
+      val (telePr, teleTr, it) =
+        pairOf(g)(seeds.select(col(seedCol).cast("long")), dampingPct)
+      def out(v: g.Vec[(Long, Long)], kPr: Int, kTr: Int) =
+        (g.frame(v, "node", "pr_fp", "tr_fp")(flat), kPr, kTr)
+      // Joint rounds while BOTH chains run — one residual action serves
+      // both stop rules ...
+      var done = (false, false)
+      it.until(maxIterations) { (next, prev) =>
+        val (l1p, l1t) = g.fold(g.zip(next, prev))((0L, 0L))({
+          case ((sp, st), ((ap, at), (bp, bt))) => (sp + math.abs(ap - bp), st + math.abs(at - bt))
+        }, plus2)
+        done = (l1p < tolFp, l1t < tolFp)
+        done._1 || done._2
+      } { (v, k) =>
+        if (done._1 == done._2 || k == maxIterations) out(v, k, k)
+        else {
+          // ... then the straggler goes on alone on the single-chain
+          // round with the other vector frozen, which is exactly what
+          // "its own loop ended" means.
+          val prFrozen = done._1
+          rankLoop(g)(if (prFrozen) teleTr else telePr, dampingPct)(
+              g.map(v)(p => if (prFrozen) p._2 else p._1))
+            .until(maxIterations - k)(l1(g)(_, _) < tolFp) { (s, ks) =>
+              val joined = g.map(g.zip(v, s)) { case ((p, t), x) =>
+                if (prFrozen) (p, x) else (x, t)
               }
-          }
+              if (prFrozen) out(joined, k, k + ks) else out(joined, k + ks, k)
+            }
         }
       }
+    }
     both.withColumn("spam_mass_ppm", spamPpm)
       .select(col("node"), col("pr_fp"), col("tr_fp"), col("spam_mass_ppm"),
         lit(kPr.toLong).as("pr_stop"), lit(kTr.toLong).as("tr_stop"))
       .orderBy(col("node"))
   }
 
-  /** ONE rank round over the prepared graph — shared by every rank face,
-    * so their bit-identity contracts hold by construction. Zero-rank
-    * sources contribute nothing; no-in-edge nodes fall back to teleport
-    * alone (the left join is narrow — both sides share `part`). */
-  private def rankRound(adj: RDD[(Long, Array[Long])], tele: Tele,
-                        part: HashPartitioner, dampingPct: Int)(ranks: Vec): Vec = {
-    val contribs = adj.join(ranks)
-      .flatMap { case (_, (dsts, r)) =>
-        if (r == 0L) Iterator.empty
-        else {
-          val c = r * dampingPct / 100L / dsts.length
-          dsts.iterator.map(d => (d, c))
-        }
-      }
-      .reduceByKey(part, _ + _)
-    tele.leftOuterJoin(contribs)
-      .mapValues { case ((t, _), c) => t + c.getOrElse(0L) }
-  }
+  /** ONE rank round — shared by every rank face, so their bit-identity
+    * contracts hold by construction. Zero-rank sources contribute
+    * nothing; no-in-edge nodes fall back to teleport alone. */
+  private def rankRound(g: Graph)(tele: g.Vec[(Long, Long)], dampingPct: Int)(
+      ranks: g.Vec[Long]): g.Vec[Long] =
+    g.merge(tele, g.spread(ranks, reverse = false)(
+        _ == 0L, share(_, dampingPct, _))(0L, _ + _), 0L)((t, c) => t._1 + c)
 
   /** ONE rank round over TWO vectors at once — the [[rankRound]]
-    * arithmetic applied componentwise to a (pr, tr) pair riding one RDD,
-    * so the spam-mass chains share one contribution shuffle per round
-    * and each component stays bit-identical to [[rankRound]] alone (a
-    * zero rank contributes the same 0 it used to skip). */
-  private def rankRound2(adj: RDD[(Long, Array[Long])],
-                         tele2: RDD[(Long, ((Long, Long), (Long, Long)))],
-                         part: HashPartitioner, dampingPct: Int)(ranks: Pair): Pair = {
-    val contribs = adj.join(ranks)
-      .flatMap { case (_, (dsts, (rp, rt))) =>
-        if (rp == 0L && rt == 0L) Iterator.empty
-        else {
-          val cp = rp * dampingPct / 100L / dsts.length
-          val ct = rt * dampingPct / 100L / dsts.length
-          dsts.iterator.map(d => (d, (cp, ct)))
-        }
-      }
-      .reduceByKey(part, (a, b) => (a._1 + b._1, a._2 + b._2))
-    tele2.leftOuterJoin(contribs)
-      .mapValues { case (((tp, _), (tt, _)), c) =>
-        val (cp, ct) = c.getOrElse((0L, 0L))
-        (tp + cp, tt + ct)
-      }
-  }
+    * arithmetic applied componentwise to a (pr, tr) pair riding one
+    * vector, so the spam-mass chains share one contribution shuffle per
+    * round and each component stays bit-identical to [[rankRound]] alone
+    * (a zero rank contributes the same 0 it used to skip). */
+  private def rankRound2(g: Graph)(tele2: g.Vec[((Long, Long), (Long, Long))],
+                                  dampingPct: Int)(ranks: g.Vec[(Long, Long)]): g.Vec[(Long, Long)] =
+    g.merge(tele2, g.spread(ranks, reverse = false)(
+        r => r._1 == 0L && r._2 == 0L,
+        (r, deg) => (share(r._1, dampingPct, deg), share(r._2, dampingPct, deg)))(
+        (0L, 0L), plus2), (0L, 0L)) { case (((tp, _), (tt, _)), (cp, ct)) =>
+      (tp + cp, tt + ct)
+    }
 
   /** Per-node (teleport, initial rank), persisted with the graph:
     * uniform over all nodes for PageRank, restricted to the in-graph
-    * seed set for TrustRank. Partitioned like the adjacency, so each
-    * round's final join stays narrow. */
-  private def teleOf(g: Graph, seedsOpt: Option[DataFrame], dampingPct: Int): Tele =
+    * seed set for TrustRank. */
+  private def teleOf(g: Graph)(seedsOpt: Option[DataFrame],
+                              dampingPct: Int): g.Vec[(Long, Long)] =
     g.pin(seedsOpt match {
       case None =>
         require(g.n > 0, "PageRank needs a non-empty graph")
-        val t = Scale * (100L - dampingPct) / 100L / g.n
-        val r0 = Scale / g.n
-        g.nodes.mapValues(_ => (t, r0))
+        val tr = teleport(dampingPct, g.n)
+        g.init(_ => tr)
       case Some(seeds) =>
-        val spark = seeds.sparkSession
-        import spark.implicits._
-        val seedRdd = seeds.filter(col(seeds.columns.head).isNotNull)
-          .distinct().as[Long].rdd.map(v => (v, ())).partitionBy(g.part)
-        val inGraph = g.nodes.join(seedRdd).mapValues(_ => ())
-        val s = inGraph.count()
+        val (in, s) = g.seeds(seeds)
         require(s > 0, "TrustRank needs at least one seed inside the graph")
-        val t = Scale * (100L - dampingPct) / 100L / s
-        val r0 = Scale / s
-        g.nodes.leftOuterJoin(inGraph)
-          .mapValues { case (_, m) => if (m.isDefined) (t, r0) else (0L, 0L) }
+        val tr = teleport(dampingPct, s)
+        g.map(in)(m => if (m) tr else (0L, 0L))
     })
 
-  /** The single-chain rank loop from `start`. */
-  private def rankIterate(g: Graph, tele: Tele, dampingPct: Int,
-                          start: Vec): Iterate[Vec] =
-    Iterate[Vec](_.vec(start))((r, k) =>
-      k.vec(rankRound(g.adj, tele, g.part, dampingPct)(r)))
+  /** The single-chain rank loop over `tele` from `start`. */
+  private def rankLoop(g: Graph)(tele: g.Vec[(Long, Long)], dampingPct: Int)(
+      start: g.Vec[Long]): Iterate[g.Vec[Long]] =
+    Iterate[g.Vec[Long]](k => g.vec(k)(start))((r, k) =>
+      g.vec(k)(rankRound(g)(tele, dampingPct)(r)))
 
-  /** Prepares the graph and its teleport and hands `run` the rank loop. */
-  private def rankChain[A](edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: Option[DataFrame], dampingPct: Int)(
-                           run: (Graph, Iterate[Vec]) => A): A = {
+  /** The rank loop from the teleport's initial ranks. */
+  private def ranksOf(g: Graph)(seeds: Option[DataFrame],
+                               dampingPct: Int): Iterate[g.Vec[Long]] = {
+    val tele = teleOf(g)(seeds, dampingPct)
+    rankLoop(g)(tele, dampingPct)(g.map(tele)(_._2))
+  }
+
+  private def rankGraph[A](edges: DataFrame, srcCol: String, dstCol: String,
+                           dampingPct: Int)(body: Graph => A): A = {
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    prepareGraph(edges, srcCol, dstCol) { g =>
-      val tele = teleOf(g, seeds, dampingPct)
-      run(g, rankIterate(g, tele, dampingPct, tele.mapValues(_._2)))
-    }
+    prepareGraph(edges, srcCol, dstCol)(body)
   }
 
-  private def rankUntil(tolFp: Long, maxIterations: Int)
-      : (Graph, Iterate[Vec]) => (DataFrame, Int) = {
-    require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
-    (g, it) => it.until(maxIterations)(l1(_, _) < tolFp)((r, k) =>
-      (g.result(r, "node", "rank_fp"), k))
+  private def rankUntil(g: Graph)(it: Iterate[g.Vec[Long]], tolFp: Long,
+                                 maxIterations: Int): (DataFrame, Int) =
+    it.until(maxIterations)(l1(g)(_, _) < tolFp)((r, k) =>
+      (g.result(r, "node", "rank_fp")(nodeRow), k))
+
+  /** The fused (pr, tr) loop of the spam-mass faces, with the two
+    * single-chain teleports. */
+  private def pairOf(g: Graph)(seeds: DataFrame, dampingPct: Int)
+      : (g.Vec[(Long, Long)], g.Vec[(Long, Long)], Iterate[g.Vec[(Long, Long)]]) = {
+    val telePr = teleOf(g)(None, dampingPct)
+    val teleTr = teleOf(g)(Some(seeds), dampingPct)
+    val tele2 = g.pin(g.zip(telePr, teleTr))
+    (telePr, teleTr, Iterate[g.Vec[(Long, Long)]](k =>
+        g.vec(k)(g.map(tele2) { case ((_, rp), (_, rt)) => (rp, rt) }))((r, k) =>
+      g.vec(k)(rankRound2(g)(tele2, dampingPct)(r))))
   }
 
-  /** The fused (pr, tr) loop of the spam-mass faces over one prepared
-    * graph; `run` also gets the two single-chain teleports. */
-  private def pairChain[A](edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: DataFrame, seedCol: String, dampingPct: Int)(
-                           run: (Graph, Tele, Tele, Iterate[Pair]) => A): A = {
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    prepareGraph(edges, srcCol, dstCol) { g =>
-      val telePr = teleOf(g, None, dampingPct)
-      val teleTr = teleOf(g, Some(seeds.select(col(seedCol).cast("long"))), dampingPct)
-      val tele2 = g.pin(telePr.join(teleTr))
-      run(g, telePr, teleTr, Iterate[Pair](k =>
-          k.vec(tele2.mapValues { case ((_, rp), (_, rt)) => (rp, rt) }))((r, k) =>
-        k.vec(rankRound2(g.adj, tele2, g.part, dampingPct)(r))))
-    }
-  }
+  /** Σ|a − b| — one pass, one action on the distributed layout. */
+  private def l1(g: Graph)(a: g.Vec[Long], b: g.Vec[Long]): Long =
+    g.fold(g.zip(a, b))(0L)((s, p) => s + math.abs(p._1 - p._2), _ + _)
 
-  /** Σ|a − b| over two co-partitioned vectors — one narrow join, one action. */
-  private def l1(a: Vec, b: Vec): Long =
-    a.join(b).map { case (_, (x, y)) => math.abs(x - y) }.fold(0L)(_ + _)
-
-  private def flat(v: Pair) = v.map { case (n, (p, t)) => (n, p, t) }
+  private val flat: (Long, (Long, Long)) => Product = { case (n, (p, t)) => (n, p, t) }
 
   // DIV, not `/`: Spark's `/` on longs is double division — the
   // truncating integer quotient is what the oracle replays.
@@ -335,7 +324,9 @@ object PageRank {
     * graph, e.g. the bipartite order→part projection ([[orderPartHits]]). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int = 10): DataFrame =
-    hitsChain(edges, srcCol, dstCol)((g, it) => it.fixed(iterations)(hubAuth(g)))
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      hitsOf(g).fixed(iterations)(v => hubAuth(g)(v))
+    }
 
   /** [EXT] [[hits]] with a convergence-driven early stop: iterate until
     * the round's COMBINED L1 residual Σ|h_k − h_{k−1}| + Σ|a_k − a_{k−1}|
@@ -345,13 +336,11 @@ object PageRank {
   def hitsUntil(edges: DataFrame, srcCol: String, dstCol: String,
                 tolFp: Long, maxIterations: Int = 50): (DataFrame, Int) = {
     require(tolFp >= 0L, "tolFp is a non-negative fixed-point residual")
-    hitsChain(edges, srcCol, dstCol) { (g, it) =>
-      it.until(maxIterations) { case ((hub, auth), (prevHub, prevAuth)) =>
-        val (dh, da) = g.sc.union(Seq(
-            hub.join(prevHub).map { case (_, (a, b)) => (math.abs(a - b), 0L) },
-            auth.join(prevAuth).map { case (_, (a, b)) => (0L, math.abs(a - b)) }))
-          .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
-        dh + da < tolFp
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      hitsOf(g).until(maxIterations) { case ((hub, auth), (prevHub, prevAuth)) =>
+        g.fold(g.zip(g.zip(hub, auth), g.zip(prevHub, prevAuth)))(0L)({
+          case (s, ((h, a), (ph, pa))) => s + math.abs(h - ph) + math.abs(a - pa)
+        }, _ + _) < tolFp
       }((v, k) => (hubAuth(g)(v), k))
     }
   }
@@ -364,56 +353,42 @@ object PageRank {
     * begin equal), mirroring the oracle's h0 join. */
   def hitsConvergence(edges: DataFrame, srcCol: String, dstCol: String,
                       iterations: Int = 10): DataFrame =
-    hitsChain(edges, srcCol, dstCol) { (g, it) =>
-      it.curve(iterations) { case (k, (hub, auth), (prevHub, prevAuth)) =>
-        Seq(hub.join(prevHub).map { case (_, (a, b)) => (k, (math.abs(a - b), 0L)) },
-          auth.join(prevAuth).map { case (_, (a, b)) => (k, (0L, math.abs(a - b))) })
+    prepareGraph(edges, srcCol, dstCol) { g =>
+      hitsOf(g).curve(iterations) { case (k, (hub, auth), (prevHub, prevAuth)) =>
+        Seq(g.rows(k, g.map(g.zip(hub, prevHub)) { case (a, b) => (math.abs(a - b), 0L) })(plus2),
+          g.rows(k, g.map(g.zip(auth, prevAuth)) { case (a, b) => (0L, math.abs(a - b)) })(plus2))
       } { ds =>
-        g.result(g.sc.union(ds.flatten).reduceByKey((x, y) => (x._1 + y._1, x._2 + y._2))
-            .map { case (k, (h, a)) => (k, h, a) },
-          "round", "l1_hub_delta_fp", "l1_auth_delta_fp")
+        g.table(g.sumRows(ds.flatten)(plus2), "round", "l1_hub_delta_fp",
+          "l1_auth_delta_fp") { case (k, (h, a)) => (k, h, a) }
       }
     }
 
-  /** ONE HITS half-step: raw sums along `along`, their L1 total, then the
-    * BigInt-normalized vector (x·Scale can exceed a Long; DuckDB's
-    * HUGEINT `//` replays the floor). The raw sums are persisted for the
-    * round: the total is an action, and without the persist every later
-    * total would recompute all earlier rounds. */
-  private def hitsHalfStep(g: Graph, keep: Keep)(
-      vec: Vec, along: RDD[(Long, Array[Long])]): Vec = {
-    val raw = keep.temp(along.join(vec)
-      .flatMap { case (_, (outs, x)) =>
-        if (x == 0L) Iterator.empty else outs.iterator.map(d => (d, x))
-      }
-      .reduceByKey(g.part, _ + _))
-    val total = raw.map(_._2).fold(0L)(_ + _)
-    g.nodes.leftOuterJoin(raw).mapValues { case (_, o) =>
-      val x = o.getOrElse(0L)
-      if (total == 0L || x == 0L) 0L
-      else (BigInt(x) * Scale / total).toLong
-    }
+  /** ONE HITS half-step: raw sums along the edges (against them when
+    * `reverse`), their L1 total, then the [[normalize]]d vector. The raw
+    * sums are kept for the round: the total is an action, and without
+    * the persist every later total would recompute all earlier rounds. */
+  private def hitsHalfStep(g: Graph)(keep: Keep, vec: g.Vec[Long],
+                                     reverse: Boolean): g.Vec[Long] = {
+    val raw = g.temp(keep)(g.spread(vec, reverse)(_ == 0L, (x, _) => x)(0L, _ + _))
+    val total = g.fold(raw)(0L)(_ + _, _ + _)
+    g.fill(raw, 0L)(normalize(_, total))
   }
 
   /** The HITS loop over (hub, auth): both start uniform, each round is
     * the double half-step. */
-  private def hitsChain[A](edges: DataFrame, srcCol: String, dstCol: String)(
-      run: (Graph, Iterate[(Vec, Vec)]) => A): A =
-    prepareGraph(edges, srcCol, dstCol) { g =>
-      run(g, Iterate[(Vec, Vec)] { k =>
-        require(g.n > 0, "HITS needs a non-empty graph")
-        val r0 = Scale / g.n
-        val h = k.vec(g.nodes.mapValues(_ => r0))
-        (h, h)
-      } { case ((hub, _), k) =>
-        val auth = k.vec(hitsHalfStep(g, k)(hub, g.adj)) // Σ hub over in-edges
-        (k.vec(hitsHalfStep(g, k)(auth, g.radj)), auth)  // Σ auth over out-edges
-      })
+  private def hitsOf(g: Graph): Iterate[(g.Vec[Long], g.Vec[Long])] =
+    Iterate[(g.Vec[Long], g.Vec[Long])] { k =>
+      require(g.n > 0, "HITS needs a non-empty graph")
+      val r0 = Scale / g.n
+      val h = g.vec(k)(g.init(_ => r0))
+      (h, h)
+    } { case ((hub, _), k) =>
+      val auth = g.vec(k)(hitsHalfStep(g)(k, hub, reverse = false)) // Σ hub over in-edges
+      (g.vec(k)(hitsHalfStep(g)(k, auth, reverse = true)), auth)    // Σ auth over out-edges
     }
 
-  private def hubAuth(g: Graph)(v: (Vec, Vec)): DataFrame =
-    g.result(v._1.join(v._2).map { case (n, (h, a)) => (n, h, a) },
-      "node", "hub_fp", "auth_fp")
+  private def hubAuth(g: Graph)(v: (g.Vec[Long], g.Vec[Long])): DataFrame =
+    g.result(g.zip(v._1, v._2), "node", "hub_fp", "auth_fp") { case (n, (h, a)) => (n, h, a) }
 
   /** [[hitsConvergence]] on the standing order→part bipartite fixture
     * (the [[orderPartHits]] 2k/2k+1 encoding). */

@@ -2,7 +2,11 @@ package graft.dedup
 
 import graft.Mat.Pinnable
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.analytics.Iterate
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.TextAnalysis
@@ -427,163 +431,145 @@ object Dedup {
   // ---- near-dup clustering ----
 
   /** Connected components over a near-dup pair graph → per-doc keeper
-    * (= min doc id in the component; singletons keep themselves).
+    * (= min doc id in the component; singletons keep themselves). The
+    * output covers every distinct id plus any pair endpoint a label
+    * reached.
     *
     * Iterative min-label propagation: each round every node takes the min
-    * of its own label and its neighbors' labels; converges in O(diameter)
-    * rounds (near-dup clusters are dense, so typically 2-3). For
-    * chain-shaped graphs where the diameter is the problem, use
-    * [[clusterKeepersStar]] (O(log² n) rounds). The per-round shape (join
-    * labels⋈edges, reduce min) is distributed-safe — no driver-side
-    * state.
+    * of its own label and its neighbors' labels; labels start on `ids`
+    * only. It converges in O(diameter) rounds (near-dup clusters are
+    * dense, so typically 2-3); it stops when the label sum stops moving
+    * (min-propagation only ever lowers a label) or after `maxIter`
+    * rounds.
+    *
+    * Pairs within `spark.sql.autoBroadcastJoinThreshold` (16 bytes a
+    * pair) are collected once ([[graft.analytics.Iterate.collectSmall]])
+    * and the rounds run over driver arrays; one job marks which pair
+    * endpoints are ids, and the labels join back to `ids` through a
+    * broadcast, so `ids` itself never reaches the driver. Larger pair
+    * sets run the distributed loop. Both call [[minLabel]] and the same
+    * label-sum stop, so they agree exactly.
     */
   def clusterKeepers(ids: DataFrame, pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    require(maxIter >= 1, "need at least one round")
     val spark = ids.sparkSession
     import spark.implicits._
-    val idName = ids.columns.head
+    val idL = ids.select(col(ids.columns.head).cast("long")).as[Long]
     // Materialize the PAIRS once, BEFORE the symmetric expansion: without
     // this the (expensive — it's the whole upstream near-dup join) pair
     // plan would re-run per derived branch.
     val p = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
       .pinned
-    // The LOOP runs on co-partitioned RDDs, not DataFrames: each round is
-    // semantically trivial (join labels with edges, take per-node min) but
-    // a DataFrame loop pays Catalyst analysis + optimization + whole-stage
-    // codegen compile PER ROUND — measured at ~0.4 s/round against
-    // kilobytes of data, the dominant cost of dedup_keepers /
-    // embedding_dedup_keepers. With a fixed HashPartitioner the
-    // labels⋈edges join is narrow (both sides pre-hashed, zero shuffle)
-    // and the only per-round movement is the reduceByKey of propagated
-    // labels — the same distributed shape as before, minus the planner.
-    // This is the GraphX-style "genuine iterative" RDD exception; the
-    // DataFrame API remains the operator's boundary.
-    //
-    // Partition count scales with the graph (~1M directed edges per
-    // partition, floor = the session parallelism — Par.graphParts),
-    // not with the session shuffle width sized for the big scans
-    // upstream.
-    val nParts = graft.Par.graphParts(p, 2L * p.count())
-    val part = new org.apache.spark.HashPartitioner(nParts)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = p.as[(Long, Long)].rdd
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part).persist(lvl)
-    var labels = ids.select(col(idName).cast("long")).as[Long].rdd
-      .map(id => (id, id)).partitionBy(part).persist(lvl)
-    // Convergence via the label sum: min-propagation only ever DECREASES
-    // labels, so an unchanged sum means a fixpoint — one cheap aggregate
-    // per round instead of a join-compare. BigInt accumulation: exact for
-    // any id range (a wrapping long sum could in principle alias two
-    // distinct states), and an empty input folds to 0 instead of NULL.
-    def labelSum(rdd: org.apache.spark.rdd.RDD[(Long, Long)]): BigInt =
-      rdd.aggregate(BigInt(0))((acc, kv) => acc + kv._2, _ + _)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = labels.join(edges, part)
-        .map { case (_, (lab, dst)) => (dst, lab) }
-      val next = labels.union(prop)
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .persist(lvl)
-      val nextSum = labelSum(next) // also materializes `next`
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      labels.unpersist(blocking = false)
-      labels = next
-      i += 1
+    Iterate.collectSmall(p) match {
+      case Right((a, b)) => localComponents(idL, a, b, maxIter)
+      case Left(m) => distComponents(idL, p, m, maxIter)
     }
-    edges.unpersist(blocking = false)
-    labels.toDF("doc_id", "keeper_id").orderBy(col("doc_id"))
   }
 
-  /** Connected components by alternating large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the variant for LONG-CHAIN graphs, where [[clusterKeepers]]'s
-    * min-label propagation needs O(diameter) rounds: star contraction
-    * converges in O(log² n) rounds regardless of diameter. Near-dup
-    * clusters are dense (diameter 2-3), so min-label stays the default;
-    * use this when the pair graph chains (e.g. fuzzy-threshold chains of
-    * drifting documents). Same output contract as [[clusterKeepers]]:
-    * (doc_id, keeper_id = min id in component) — pinned equal on random
-    * graphs by PropertySpec.
-    *
-    *  - large-star: every node links its LARGER neighbors to the minimum
-    *    of its neighborhood (keeps the graph connected, shrinks height);
-    *  - small-star: every node links its smaller-or-equal neighborhood to
-    *    that minimum (contracts toward the root).
-    *
-    * Each round is groupByKey + flatMap + distinct on the same fixed
-    * partitioner — the RDD loop for the same reason as [[clusterKeepers]]
-    * (per-round Catalyst replanning would dominate). Termination: the
-    * edge set is a fixpoint (stars only), detected by an order-independent
-    * edge fingerprint.
-    */
-  def clusterKeepersStar(ids: DataFrame, pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+  /** The min-label step, shared by both layouts. */
+  private def minLabel(a: Long, b: Long): Long = math.min(a, b)
+
+  /** The distributed CC loop on co-partitioned RDDs, not DataFrames: each
+    * round is semantically trivial (join labels with edges, take per-node
+    * min) but a DataFrame loop pays Catalyst analysis + optimization +
+    * whole-stage codegen compile PER ROUND — measured at ~0.4 s/round
+    * against kilobytes of data. With a fixed HashPartitioner the
+    * labels⋈edges join is narrow and the only per-round movement is the
+    * reduceByKey of propagated labels. Partition count scales with the
+    * graph (`Par.graphParts`). [[Iterate]] owns every persist: each
+    * round's labels are persisted before the label-sum action and the
+    * previous round dropped after it; the result is pinned before the
+    * edges and the last labels drop. */
+  private def distComponents(ids: Dataset[Long], p: DataFrame, m: Long,
+                             maxIter: Int): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    val idName = ids.columns.head
-    val p = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .pinned
-    val nParts = graft.Par.graphParts(p, 2L * p.count())
-    val part = new org.apache.spark.HashPartitioner(nParts)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val part = new HashPartitioner(graft.Par.graphParts(p, 2L * m))
+    val pins = new Iterate.Pins
+    try {
+      val edges = pins(p.as[(Long, Long)].rdd
+        .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+        .partitionBy(part))
+      // Convergence via the label sum: an unchanged sum means a fixpoint
+      // — one cheap aggregate per round instead of a join-compare.
+      // BigInt accumulation: exact for any id range (a wrapping long sum
+      // could in principle alias two distinct states), and an empty input
+      // folds to 0 instead of NULL.
+      def labelSum(rdd: RDD[(Long, Long)]): BigInt =
+        rdd.aggregate(BigInt(0))((acc, kv) => acc + kv._2, _ + _)
+      var sum = BigInt(0)
+      Iterate[RDD[(Long, Long)]] { k =>
+        val l = k.vec(ids.rdd.map(id => (id, id)).partitionBy(part))
+        sum = labelSum(l)
+        l
+      } { (labels, k) =>
+        val prop = labels.join(edges, part).map { case (_, (lab, dst)) => (dst, lab) }
+        k.vec(labels.union(prop).reduceByKey(part, minLabel _))
+      }.until(maxIter) { (next, _) =>
+        val s = labelSum(next) // also materializes `next`
+        val done = s == sum
+        sum = s
+        done
+      }((labels, _) => labels.toDF("doc_id", "keeper_id").orderBy(col("doc_id")).pinned)
+    } finally pins.drop()
+  }
 
-    def largeStar(e: org.apache.spark.rdd.RDD[(Long, Long)]) =
-      e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
-        .groupByKey(part)
-        .flatMap { case (u, nbrs) =>
-          var m = u
-          nbrs.foreach(v => if (v < m) m = v)
-          nbrs.iterator.filter(_ > u).map(v => (v, m))
+  /** The driver-local CC loop over the collected pairs `(a, b)`: labels
+    * start on the endpoints that are ids. The label sum is the
+    * distributed loop's restricted to the pair graph: ids off the graph
+    * keep their label, so they only move the sum in round 1, when their
+    * duplicate rows merge — `dup` (Σ (copies − 1)·id over all ids) stands
+    * in for that. */
+  private def localComponents(ids: Dataset[Long], a: Array[Long], b: Array[Long],
+                              maxIter: Int): DataFrame = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val nodes = (a ++ b).sorted.distinct
+    val n = nodes.length
+    def idx(v: Long) = java.util.Arrays.binarySearch(nodes, v)
+    val (ai, bi) = (a.map(idx), b.map(idx))
+    val (off, nbr) = Iterate.Local.csr(n, ai ++ bi, bi ++ ai)
+    // Distinct ids with their copy count: ONE shuffle, whose output the
+    // result re-reads. The job marks the endpoints that are ids (|V|
+    // bits per partition) and sums the duplicate excess.
+    val counted = ids.rdd.map(v => (v, 1L)).reduceByKey(_ + _)
+    val bcNodes = spark.sparkContext.broadcast(nodes)
+    val (member, dup) = counted.mapPartitions { it =>
+      val bits = new java.util.BitSet(bcNodes.value.length)
+      var d = BigInt(0)
+      it.foreach { case (v, c) =>
+        d += BigInt(v) * (c - 1L)
+        val i = java.util.Arrays.binarySearch(bcNodes.value, v)
+        if (i >= 0) bits.set(i)
+      }
+      Iterator((bits, d))
+    }.fold((new java.util.BitSet(n), BigInt(0))) { (x, y) => x._1.or(y._1); (x._1, x._2 + y._2) }
+    def labelSum(l: (Array[Long], Array[Boolean])): BigInt =
+      (0 until n).foldLeft(BigInt(0))((s, i) => if (l._2(i)) s + l._1(i) else s)
+    val start = (nodes.clone(), Array.tabulate(n)(member.get))
+    var sum = labelSum(start) + dup
+    val (lab, has) = Iterate[(Array[Long], Array[Boolean])](_ => start) {
+      case ((l, h), _) =>
+        val (next, nextHas) = (l.clone(), h.clone())
+        for (u <- 0 until n if h(u); j <- off(u) until off(u + 1)) {
+          val v = nbr(j)
+          next(v) = if (nextHas(v)) minLabel(next(v), l(u)) else l(u)
+          nextHas(v) = true
         }
-        .distinct(nParts)
-
-    def smallStar(e: org.apache.spark.rdd.RDD[(Long, Long)]) =
-      e.map { case (u, v) => if (u > v) (u, v) else (v, u) }
-        .groupByKey(part)
-        .flatMap { case (u, nbrs) =>
-          var m = u
-          nbrs.foreach(v => if (v < m) m = v)
-          (nbrs.iterator ++ Iterator(u)).filter(_ != m).map(v => (v, m))
-        }
-        .distinct(nParts)
-
-    // Order-independent fingerprint of the edge set (sum of a 64-bit mix
-    // per edge): equal fingerprints across a full large+small round mean
-    // the star fixpoint is reached. BigInt sum — exact, no overflow alias.
-    def fingerprint(e: org.apache.spark.rdd.RDD[(Long, Long)]): BigInt =
-      e.aggregate(BigInt(0))((acc, kv) => {
-        var x = kv._1 * 0x9e3779b97f4a7c15L + kv._2
-        x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-        x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-        acc + (x ^ (x >>> 31))
-      }, _ + _)
-
-    var edges = p.as[(Long, Long)].rdd
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.max(a, b), math.min(a, b)) }
-      .distinct(nParts)
-      .persist(lvl)
-    var prev = fingerprint(edges)
-    var converged = edges.isEmpty()
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = smallStar(largeStar(edges)).persist(lvl)
-      val fp = fingerprint(next)
-      converged = fp == prev
-      prev = fp
-      edges.unpersist(blocking = false)
-      edges = next
-      i += 1
+        (next, nextHas)
+    }.until(maxIter) { (next, _) =>
+      val s = labelSum(next)
+      val done = s == sum
+      sum = s
+      done
+    }((l, _) => l)
+    val bcLab = spark.sparkContext.broadcast(lab)
+    val fromIds = counted.map { case (v, _) =>
+      val i = java.util.Arrays.binarySearch(bcNodes.value, v)
+      (v, if (i >= 0) bcLab.value(i) else v)
     }
-    // Fixpoint edges are (node, componentMin) stars; roots and isolated
-    // nodes keep themselves.
-    val stars = edges.toDF("doc_id", "keeper_id")
-    ids.select(col(idName).cast("long").as("doc_id"))
-      .join(stars, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("keeper_id"), col("doc_id")).as("keeper_id"))
+    val reached = (0 until n).filter(i => has(i) && !member.get(i)).map(i => (nodes(i), lab(i)))
+    fromIds.toDF("doc_id", "keeper_id").union(reached.toDF("doc_id", "keeper_id"))
       .orderBy(col("doc_id"))
   }
 

@@ -8,7 +8,7 @@ import org.scalacheck.rng.Seed
 /** Property-based invariants (SURVEY §5.3). Each property runs a real
   * Spark job, so the iteration count is kept small — the point is
   * randomized STRUCTURE (dup patterns, gaps, empty edge cases), not volume. */
-class PropertySpec extends AnyFunSuite with SparkSpec {
+class PropertySpec extends AnyFunSuite with SparkSpec with GraphPaths {
   import spark.implicits._
 
   /** Deterministic property loop over fixed seeds (no scalatest-scalacheck
@@ -142,7 +142,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("star-contraction CC equals min-label CC on random graphs (incl. chains)") {
+  graphTest("star-contraction CC equals min-label CC on random graphs (incl. chains)") {
     val edgeGen = for {
       n <- Gen.choose(8, 40)
       // a chain fragment (min-label's worst case) plus random cross edges
@@ -159,7 +159,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
                   else edges.toDF("id_a", "id_b")
       val minLabel = graft.dedup.Dedup.clusterKeepers(ids, pairs, maxIter = 64)
         .as[(Long, Long)].collect().toSeq
-      val star = graft.dedup.Dedup.clusterKeepersStar(ids, pairs)
+      val star = graft.dedup.StarComponents.clusterKeepersStar(ids, pairs)
         .as[(Long, Long)].collect().toSeq
       assert(star == minLabel)
     }

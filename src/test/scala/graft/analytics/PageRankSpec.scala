@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Pins the fixed-point PageRank contract: mass conservation up to
   * documented truncation, symmetry, ordering by centrality, determinism
-  * under partitioning, and multi-edge idempotence. */
-class PageRankSpec extends SparkSpec {
+  * under partitioning, and multi-edge idempotence — every test on both
+  * graph layouts. */
+class PageRankSpec extends SparkSpec with graft.GraphPaths {
   import spark.implicits._
 
   private def sym(pairs: (Long, Long)*) =
     pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
 
-  test("symmetric pair splits rank equally; mass conserved up to truncation") {
+  graphTest("symmetric pair splits rank equally; mass conserved up to truncation") {
     val out = PageRank.ranks(sym((1L, 2L)), "src", "dst", iterations = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) == out(2L))
@@ -22,14 +23,14 @@ class PageRankSpec extends SparkSpec {
     assert(total <= PageRank.Scale && total > PageRank.Scale - 1000L)
   }
 
-  test("star center outranks leaves; leaves tie") {
+  graphTest("star center outranks leaves; leaves tie") {
     val out = PageRank.ranks(sym((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)),
         "src", "dst").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(2L, 3L, 4L, 5L).map(out).distinct.size == 1)
     assert(out(1L) > out(2L))
   }
 
-  test("partitioning and duplicate edges do not change ranks") {
+  graphTest("partitioning and duplicate edges do not change ranks") {
     val base = sym((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
     val a = PageRank.ranks(base.repartition(1), "src", "dst").collect().toSeq
     val b = PageRank.ranks(base.union(base).repartition(13), "src", "dst")
@@ -42,7 +43,7 @@ class PageRankSpec extends SparkSpec {
       Lpa.labelPropagation(dup, "src", "dst").collect().toSeq)
   }
 
-  test("edge contracts: empty edge sets and null endpoints") {
+  graphTest("edge contracts: empty edge sets and null endpoints") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     intercept[IllegalArgumentException] {
       PageRank.ranks(empty, "src", "dst").collect()
@@ -64,7 +65,7 @@ class PageRankSpec extends SparkSpec {
       Lpa.labelPropagation(cleanDf, "src", "dst").collect().toSeq)
   }
 
-  test("convergence curve == plain-Scala replay; residuals decay (F130)") {
+  graphTest("convergence curve == plain-Scala replay; residuals decay (F130)") {
     // exact integer replay of the fixed-point loop over a small graph
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (3L, 4L), (4L, 1L))
     val iters = 8
@@ -97,7 +98,7 @@ class PageRankSpec extends SparkSpec {
     assert(got.last._2 < got.head._2 / 4, s"no decay: $got")
   }
 
-  test("early-stop variants are bit-identical to fixed rounds at the stop round (F137)") {
+  graphTest("early-stop variants are bit-identical to fixed rounds at the stop round (F137)") {
     // The tolerance-mode contract: whatever round the residual rule
     // stops at, the shipped vector equals the fixed-round run of
     // exactly that length — the early stop changes WHEN you stop, never
@@ -145,7 +146,7 @@ class PageRankSpec extends SparkSpec {
     assert(lpP.collect().toSeq == lpA.collect().toSeq)
   }
 
-  test("copurchase edges symmetrize the order-part projection") {
+  graphTest("copurchase edges symmetrize the order-part projection") {
     val li = Seq((100L, 1L), (100L, 2L), (100L, 2L), (101L, 2L), (101L, 3L),
         (102L, 9L))
       .toDF("l_orderkey", "l_partkey")
@@ -158,7 +159,7 @@ class PageRankSpec extends SparkSpec {
     assert(nodes == Set(1L, 2L, 3L))
   }
 
-  test("trust decays with distance from the seed; unreachable nodes rank 0") {
+  graphTest("trust decays with distance from the seed; unreachable nodes rank 0") {
     // Path 1-2-3-4 plus an isolated pair 8-9; seed = node 1.
     val edges = sym((1L, 2L), (2L, 3L), (3L, 4L), (8L, 9L))
     // 40 iterations: 10 leaves parity oscillation on a path graph (trust
@@ -177,7 +178,7 @@ class PageRankSpec extends SparkSpec {
     assert(total <= PageRank.Scale && total > PageRank.Scale - 1000L)
   }
 
-  test("seeds outside the graph are ignored; all-outside seeds reject") {
+  graphTest("seeds outside the graph are ignored; all-outside seeds reject") {
     val edges = sym((1L, 2L))
     val a = PageRank.seededRanks(edges, "src", "dst", Seq(1L).toDF("v"), "v")
       .collect().toSeq
@@ -190,7 +191,7 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
-  test("spam mass: far-from-seed nodes carry high ppm, the seed near 0") {
+  graphTest("spam mass: far-from-seed nodes carry high ppm, the seed near 0") {
     // Seed community 1-2-3 tightly linked; spam farm 10-11-12 linked to
     // itself only, reachable from nowhere trusted.
     val edges = sym((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L),
@@ -208,7 +209,7 @@ class PageRankSpec extends SparkSpec {
     assert(out(2L)._3 < 500000L)
   }
 
-  test("fused spam-mass loops == the single-chain faces run separately") {
+  graphTest("fused spam-mass loops == the single-chain faces run separately") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
     // fixed rounds: pr_fp is ranks, tr_fp is seededRanks
@@ -249,7 +250,7 @@ class PageRankSpec extends SparkSpec {
     assert(order.toSet == Set(-1, 1), s"stop orders $order")
   }
 
-  test("more central part ranks higher in the copurchase graph") {
+  graphTest("more central part ranks higher in the copurchase graph") {
     // part 5 co-occurs with everyone; 6/7/8 only with 5.
     val li = Seq((1L, 5L), (1L, 6L), (2L, 5L), (2L, 7L), (3L, 5L), (3L, 8L))
       .toDF("l_orderkey", "l_partkey")
@@ -259,7 +260,7 @@ class PageRankSpec extends SparkSpec {
     assert(out(6L) == out(7L) && out(7L) == out(8L))
   }
 
-  test("LPA == plain-Scala reference over random directed graphs (r10)") {
+  graphTest("LPA == plain-Scala reference over random directed graphs (r10)") {
     val rnd = new scala.util.Random(23)
     for (trial <- 0 until 3) {
       val n = 40
@@ -285,7 +286,7 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
-  test("LPA convergence curve == plain-Scala churn replay (F135)") {
+  graphTest("LPA convergence curve == plain-Scala churn replay (F135)") {
     val rnd = new scala.util.Random(31)
     val n = 30
     val edges = (0 until 120).map(_ =>
@@ -316,7 +317,7 @@ class PageRankSpec extends SparkSpec {
     assert(got.head._3 >= got.last._3)
   }
 
-  test("HITS convergence curve == plain-Scala residual replay (F136)") {
+  graphTest("HITS convergence curve == plain-Scala residual replay (F136)") {
     val edges = Seq((0L, 101L), (0L, 103L), (2L, 101L), (2L, 105L),
       (4L, 103L), (4L, 105L), (6L, 101L))
     val iters = 4
@@ -348,7 +349,7 @@ class PageRankSpec extends SparkSpec {
     assert(got.last._2 < got.head._2 / 4 && got.last._3 < got.head._3 / 4)
   }
 
-  test("HITS == plain-Scala reference over a random bipartite graph (r10)") {
+  graphTest("HITS == plain-Scala reference over a random bipartite graph (r10)") {
     val rnd = new scala.util.Random(31)
     val edges = (0 until 120).map(_ =>
       (rnd.nextInt(15).toLong * 2, rnd.nextInt(10).toLong * 2 + 1)).distinct
@@ -381,7 +382,7 @@ class PageRankSpec extends SparkSpec {
     assert(got == nodes.map(v => v -> ((hub(v), auth(v)))).toMap)
   }
 
-  test("LPA: cliques converge to one label, components never merge, ties go low (r10)") {
+  graphTest("LPA: cliques converge to one label, components never merge, ties go low (r10)") {
     // Two disjoint symmetric triangles: each converges to its min id,
     // and no label crosses the component gap.
     val twoCliques = sym((1L, 2L), (2L, 3L), (1L, 3L),
@@ -405,7 +406,7 @@ class PageRankSpec extends SparkSpec {
       Lpa.labelPropagation(twoCliques, "src", "dst").collect().toSeq)
   }
 
-  test("HITS: bipartite hubs/authorities separate; symmetric graph degenerates (r10)") {
+  graphTest("HITS: bipartite hubs/authorities separate; symmetric graph degenerates (r10)") {
     // Orders 1-3 all buy part 5; order 1 (the big basket) also buys 6, 7.
     val li = Seq((1L, 5L), (1L, 6L), (1L, 7L), (2L, 5L), (3L, 5L))
       .toDF("l_orderkey", "l_partkey")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * comments: MinHash/LSH output equals the exact Jaccard join at the same
   * threshold (on data where banding recall is ~certain), and SimHash bit
   * semantics are stable and symmetric. */
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with graft.GraphPaths {
   import spark.implicits._
 
   private def docs = Seq(
@@ -90,7 +90,7 @@ class DedupSpec extends SparkSpec {
     assert(java.lang.Long.bitCount(sh2(1L) ^ sh2(3L)) < 32) // near, not random
   }
 
-  test("clusterKeepers: transitive closure, min-id keeper, singletons self") {
+  graphTest("clusterKeepers: transitive closure, min-id keeper, singletons self") {
     val ids = (1L to 6L).toDF("doc_id")
     // chain 1-2, 2-3 (one component), pair 4-5, singleton 6
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
@@ -99,7 +99,7 @@ class DedupSpec extends SparkSpec {
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
   }
 
-  test("scaled keepers (minhash->verify->CC) equal exact corpus-wide keepers") {
+  graphTest("scaled keepers (minhash->verify->CC) equal exact corpus-wide keepers") {
     // The 100 TB composition must land on the same components as the
     // exact quadratic path: at threshold 0.9 a qualifying pair escapes
     // 16x4 banding with prob ~4e-8, so on the sf0.001 fixture equality is
@@ -115,7 +115,7 @@ class DedupSpec extends SparkSpec {
     assert(scaled == exact)
   }
 
-  test("maxBucket valve: no-op above the widest bucket, binds on a planted mega-bucket (F134)") {
+  graphTest("maxBucket valve: no-op above the widest bucket, binds on a planted mega-bucket (F134)") {
     // Below the cap the capped form must be BIT-IDENTICAL to uncapped —
     // that identity is what licenses dedup_keepers_capped's exact-CC
     // oracle at the driver fixture scales.
@@ -171,7 +171,7 @@ class DedupSpec extends SparkSpec {
     assert(tied == Map(1L -> 1L, 2L -> 1L, 4L -> 4L))
   }
 
-  test("newKeepers: incremental batch dedup equals the full recompute") {
+  graphTest("newKeepers: incremental batch dedup equals the full recompute") {
     // 20-token sentences; a one-token change gives J = 19/21 ~ 0.9048 >=
     // 0.9, caught by 16x4 banding with prob ~1-4e-8 — recall is
     // exhaustive here, so incremental must EQUAL the full recompute.
